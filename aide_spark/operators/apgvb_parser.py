@@ -11,22 +11,26 @@ behavior (first record compares against 0.0, apgvb:821-824).
 Amount search scans the start line plus up to 3 following raw page lines,
 skipping empty/'---' lines, for the first line carrying the balance pattern
 ``([\\d,]+\\.?\\d*)Cr\\s+`` with a clean amount before it (apgvb:833-892) —
-mapped to a lead-line candidate array. Transactions whose amounts land on a
-lookahead line CONSUME those lines (apgvb:696: ``i += offset+1``): a
-consumed line never re-parses as a transaction start. That sequential
-consumption is reproduced with a per-page left fold (``F.aggregate``) over
-the start candidates — state is (next allowed line index, accepted offsets);
-pages are bounded (≤ a few hundred lines), so the fold is a cheap array
-expression, and when every hit is at offset 0 (the common corpus) it
-accepts everything, matching the plain window scan.
+mapped to a candidate array of page-bounded leads (``lines.page_lead``).
+Transactions whose amounts land on a lookahead line CONSUME those lines
+(apgvb:696: ``i += offset+1``): a consumed line never re-parses as a
+transaction start. That sequential consumption is reproduced with a per-page
+left fold (``F.aggregate``) over the candidate records — state is (next
+allowed line index, accepted records) — and the accepted records are
+exploded straight into rows. The parse is single-pass: one line window
+(``lines.doc_window``) feeds the lookahead, and the same order gives the
+balance ``lag`` and the record ``order`` after the fold, so the branch has
+one scan, one exchange and no join. The fold stays per page because its
+``concat`` accumulator is quadratic in the array length; pages are bounded
+(≤ a few hundred lines), a doc is not.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .lines import py_strip
+from .lines import doc_window, last_match, nz, page_lead, py_strip
 
 BANK_NAME = "Andhra Pradesh Grameena Bank"
 
@@ -67,21 +71,16 @@ def _clean_numeric_last(before: Column) -> Column:
 def transactions(lines: DataFrame) -> DataFrame:
     """(doc_id, page, off, line) → TRANSACTIONS_OUT rows for APGVB docs."""
     line = F.col("line")
-    is_start = ~_skip(line) & line.rlike(START_RE)
-    w_page = Window.partitionBy("doc_id", "page").orderBy("off")
-
+    w = doc_window()
     df = (
-        lines.withColumn("idx", F.row_number().over(w_page) - 1)  # reference's i
+        # idx is the reference's per-page line index i plus a per-page
+        # constant, which the per-page fold below only ever compares
+        lines.withColumn("idx", F.row_number().over(w))
         .withColumn(
             "cands",
-            F.array(
-                line,
-                F.lead("line", 1).over(w_page),
-                F.lead("line", 2).over(w_page),
-                F.lead("line", 3).over(w_page),
-            ),
+            F.array(line, page_lead("line", 1), page_lead("line", 2), page_lead("line", 3)),
         )
-        .where(is_start)
+        .where(~_skip(line) & line.rlike(START_RE))
     )
 
     # first candidate line carrying both the balance pattern and a clean
@@ -103,46 +102,40 @@ def transactions(lines: DataFrame) -> DataFrame:
         ),
         F.lit(1),
     )
-    df = df.withColumn("hit_idx", hit_idx).withColumn(
-        "hit", F.try_element_at("cands", F.col("hit_idx") + 1)
+    df = (
+        df.withColumn("hit_idx", hit_idx)
+        .where(F.col("hit_idx").isNotNull())
+        .withColumn("hit", F.element_at("cands", F.col("hit_idx") + 1))
     )
 
     # lookahead CONSUMPTION (apgvb:696 `i += offset+1`): per-page fold over
-    # start candidates in line order — accept a start only if its line index
-    # is past the previous accepted start's consumed range
-    keep = (
-        df.groupBy("doc_id", "page")
-        .agg(
-            F.array_sort(
-                F.collect_list(F.struct(F.col("idx"), F.col("hit_idx"), F.col("off")))
-            ).alias("ss")
-        )
-        .select(
-            "doc_id",
-            F.explode(
-                F.aggregate(
-                    "ss",
-                    F.struct(
-                        F.lit(0).alias("nxt"),
-                        F.array().cast("array<int>").alias("keep"),
-                    ),
-                    lambda acc, s: F.when(
-                        (s["idx"] >= acc["nxt"]) & s["hit_idx"].isNotNull(),
-                        F.struct(
-                            (s["idx"] + s["hit_idx"] + 1).alias("nxt"),
-                            F.concat(acc["keep"], F.array(s["off"])).alias("keep"),
-                        ),
-                    ).otherwise(acc),
-                    lambda acc: acc["keep"],
-                )
-            ).alias("off"),
-        )
+    # the records in line order — accept a start only if its line index is
+    # past the previous accepted start's consumed range. The fold keeps the
+    # accepted records themselves, which are exploded straight into rows.
+    recs = df.groupBy("doc_id", "page").agg(
+        F.array_sort(
+            F.collect_list(F.struct("idx", "hit_idx", "off", "line", "hit"))
+        ).alias("ss")
+    )
+    kept = F.aggregate(
+        "ss",
+        F.struct(
+            F.lit(0).alias("nxt"),
+            F.filter("ss", lambda s: F.lit(False)).alias("keep"),  # typed []
+        ),
+        lambda acc, s: F.when(
+            s["idx"] >= acc["nxt"],
+            F.struct(
+                (s["idx"] + s["hit_idx"] + 1).alias("nxt"),
+                F.concat(acc["keep"], F.array(s)).alias("keep"),
+            ),
+        ).otherwise(acc),
+        lambda acc: acc["keep"],
     )
 
     before = py_strip(F.element_at(F.split(F.col("hit"), BAL_RE), 1))
     parsed = (
-        df.where(F.col("hit").isNotNull())
-        .join(keep, ["doc_id", "off"], "left_semi")
+        recs.select("doc_id", "page", F.inline(kept))
         .withColumn(
             "bal_num",
             F.regexp_replace(F.regexp_extract("hit", BAL_CAP_RE, 1), ",", "").cast("double"),
@@ -153,8 +146,7 @@ def transactions(lines: DataFrame) -> DataFrame:
     )
 
     # balance-change classification — the lag window (P10)
-    w_doc = Window.partitionBy("doc_id").orderBy("off")
-    change = F.col("bal_num") - F.lag("bal_num", 1, 0.0).over(w_doc)
+    change = F.col("bal_num") - F.lag("bal_num", 1, 0.0).over(w)
     txn_type = F.when(change < 0, F.lit("Debit")).otherwise(F.lit("Credit"))  # ==0 ⇒ Credit
 
     # description cleaning (apgvb:909-952)
@@ -177,9 +169,7 @@ def transactions(lines: DataFrame) -> DataFrame:
         )
         .withColumn("Balance", F.col("bal_num").cast("string"))
         .withColumn("Page_Number", F.col("page").cast("int"))
-        .withColumn(
-            "order", F.row_number().over(Window.partitionBy("doc_id").orderBy("off")).cast("int")
-        )
+        .withColumn("order", F.row_number().over(w).cast("int"))
         .withColumn("S_No", F.col("order").cast("string"))  # continuous across pages (apgvb:597-613)
     )
     return out.select(
@@ -196,15 +186,12 @@ def transactions(lines: DataFrame) -> DataFrame:
 
 def metadata(head_lines: DataFrame) -> DataFrame:
     """Per-doc metadata from the first two pages (apgvb:440-551);
-    ``head_lines`` is the materialized (doc_id, arr) from
-    ``lines.head_lines_table(two_pages=True)``."""
+    ``head_lines`` is the staged (doc_id, arr) from
+    ``lines.head_lines_frame(two_pages=True)``."""
     arr = F.col("arr")
 
     def last_extract(cond, pat: str, group: int = 1) -> Column:
-        matched = F.try_element_at(
-            F.filter(arr, lambda l: cond(l) & (F.regexp_extract(l, pat, group) != "")),
-            F.lit(-1),
-        )
+        matched = last_match(arr, lambda l: cond(l) & (F.regexp_extract(l, pat, group) != ""))
         return F.regexp_extract(matched, pat, group)
 
     period_re = r"(?:Period\s*:\s*|from\s+)(\d{2}-\d{2}-\d{4})\s+to\s+(\d{2}-\d{2}-\d{4})"
@@ -230,7 +217,7 @@ def metadata(head_lines: DataFrame) -> DataFrame:
     meta = F.struct(
         F.lit(BANK_NAME).alias("bank_name"),
         F.lit("INR").alias("currency"),
-        _nz(
+        nz(
             py_strip(
                 last_extract(
                     lambda l: l.contains("Account No") & l.contains("INR"),
@@ -239,10 +226,10 @@ def metadata(head_lines: DataFrame) -> DataFrame:
             )
         ).alias("customer_name"),
         F.lit(None).cast("string").alias("customer_cif_id"),
-        _nz(
+        nz(
             last_extract(lambda l: l.contains("Account No"), r"Account No\s*:\s*(\d+)")
         ).alias("account_number"),
-        _nz(
+        nz(
             py_strip(
                 last_extract(
                     lambda l: l.contains("CURRENT DEPOSITS") | l.contains("SAVINGS"),
@@ -254,7 +241,7 @@ def metadata(head_lines: DataFrame) -> DataFrame:
         F.lit(None).cast("string").alias("statement_date"),
         period.alias("statement_period"),
         F.lit(None).cast("string").alias("mobile_number"),
-        _nz(
+        nz(
             py_strip(
                 last_extract(
                     lambda l: l.contains("Service OutLet"), r"Service OutLet\s*:\s*\d+\s+(.+)"
@@ -266,10 +253,6 @@ def metadata(head_lines: DataFrame) -> DataFrame:
         opening.alias("opening_balance"),
     )
     return head_lines.select("doc_id", meta.alias("metadata"))
-
-
-def _nz(c: Column) -> Column:
-    return F.when(c != "", c)
 
 
 def summary(txns: DataFrame, meta: DataFrame) -> DataFrame:

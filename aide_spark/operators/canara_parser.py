@@ -7,7 +7,7 @@ Distinctive semantics vs Union:
   date-led line containing e.g. 'Balance' is never a transaction start;
 * records combine from the date line up to the first ``Chq:`` line; the
   amounts live on the line IMMEDIATELY AFTER ``Chq:`` (canara:262-291) —
-  mapped to ``lead(line)`` over the page (the reference reads the raw
+  mapped to ``lines.page_lead`` (the reference reads the raw
   ``lines[i+1]``, which may even cross into the next record);
 * serial numbers restart at 1 on every page (canara:221);
 * the financial summary sorts by parsed date but still assigns
@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from .lines import py_strip
+from .lines import doc_window, earlier_in_seg, last_match, nz, page_lead, py_strip, segments
 
 BANK_NAME = "Canara Bank"
 
@@ -43,47 +43,28 @@ def transactions(lines: DataFrame) -> DataFrame:
         & ~line.startswith("Opening Balance")
         & line.rlike(DATE_RE)
     )
-    w_page = Window.partitionBy("doc_id", "page").orderBy("off")
-    # the raw next line on the page — reference's lines[i+1] (canara:280-281)
-    df = (
-        lines.withColumn("next_line", F.coalesce(F.lead("line", 1).over(w_page), F.lit("")))
-        .withColumn("seg", F.sum(is_start.cast("int")).over(w_page))
-        .where(F.col("seg") >= 1)
-    )
-
     # combine (canara:262-291): non-empty lines from the start up to and
-    # including the FIRST 'Chq:' line of the segment.
-    w_seg = Window.partitionBy("doc_id", "page", "seg").orderBy("off")
-    before = w_seg.rowsBetween(Window.unboundedPreceding, -1)
-    chq_before = F.coalesce(
-        F.sum(line.startswith("Chq:").cast("int")).over(before), F.lit(0)
+    # including the FIRST 'Chq:' line of the segment; the amounts line is
+    # the raw line after it on the page (canara:278-282), '' when there is
+    # none or no Chq: was found before the segment ended
+    is_chq = line.startswith("Chq:")
+    no_chq_yet = earlier_in_seg(is_chq) == 0
+    segs = segments(
+        lines.withColumn("next_line", F.coalesce(page_lead("line", 1), F.lit(""))),
+        is_start,
+        (line != "") & no_chq_yet,
+        amt_line=F.when(is_chq & no_chq_yet, F.col("next_line")),
     )
-    include = (line != "") & (chq_before == 0)
-    is_chq = line.startswith("Chq:") & (chq_before == 0)
-    seg_rows = df.withColumn(
-        "part", F.when(include, F.struct("off", "line"))
-    ).withColumn(
-        # amounts line = raw line after the first Chq: line (canara:278-282)
-        "amt_line", F.when(is_chq, F.col("next_line"))
-    )
-    segs = seg_rows.groupBy("doc_id", "page", "seg").agg(
-        F.array_join(
-            F.array_sort(F.collect_list("part")).getField("line"), " "
-        ).alias("combined"),
-        # '' when no Chq: was found before the segment ended
-        F.coalesce(F.max("amt_line"), F.lit("")).alias("amounts_line"),
-        F.min("off").alias("start_off"),
-    ).withColumnRenamed("page", "pg")
 
-    combined = F.col("combined")
-    date = F.element_at(F.split(combined, r"\s+"), 1)
+    text = F.col("text")
+    date = F.element_at(F.split(text, r"\s+"), 1)
     valid_date = (F.length(date) == 10) & (
         F.size(F.split(date, "-")) == 3
     )  # len==10 and count('-')==2 (canara:316)
 
     # amounts: whitespace tokens that contain '.' and are all digits after
     # stripping ',' and '.' (canara:326-342); commas removed in the output
-    toks = F.split(F.col("amounts_line"), r"\s+")
+    toks = F.split(F.coalesce(F.col("amt_line"), F.lit("")), r"\s+")
     numeric = F.transform(
         F.filter(
             toks,
@@ -99,8 +80,8 @@ def transactions(lines: DataFrame) -> DataFrame:
         .otherwise(F.lit("0.00"))
     )
 
-    txn_type = F.when(combined.contains("/DR/"), F.lit("Debit")).otherwise(F.lit("Credit"))
-    particulars = py_strip(F.expr("substring(combined, length(split(combined, '\\\\s+')[0]) + 2)"))
+    txn_type = F.when(text.contains("/DR/"), F.lit("Debit")).otherwise(F.lit("Credit"))
+    particulars = py_strip(F.expr("substring(text, length(split(text, '\\\\s+')[0]) + 2)"))
 
     out = (
         segs.where(valid_date)
@@ -110,19 +91,14 @@ def transactions(lines: DataFrame) -> DataFrame:
         .withColumn("Debit", F.when(txn_type == "Debit", amount_str).otherwise(F.lit("")))
         .withColumn("Credit", F.when(txn_type == "Credit", amount_str).otherwise(F.lit("")))
         .withColumn("Balance", balance_str)
-        .withColumn("Page_Number", F.col("pg").cast("int"))
+        .withColumn("Page_Number", F.col("page").cast("int"))
         .withColumn(
             "S_No",  # serial restarts per page (canara:221)
             F.row_number()
-            .over(Window.partitionBy("doc_id", "pg").orderBy("start_off"))
+            .over(Window.partitionBy("doc_id", "page").orderBy("off"))
             .cast("string"),
         )
-        .withColumn(
-            "order",
-            F.row_number()
-            .over(Window.partitionBy("doc_id").orderBy("start_off"))
-            .cast("int"),
-        )
+        .withColumn("order", F.row_number().over(doc_window()).cast("int"))
     )
     return out.select(
         "doc_id", "order", "S_No", "Date",
@@ -136,13 +112,9 @@ def transactions(lines: DataFrame) -> DataFrame:
     )
 
 
-def _last_line(arr: Column, cond) -> Column:
-    return F.try_element_at(F.filter(arr, cond), F.lit(-1))
-
-
 def metadata(head_lines: DataFrame) -> DataFrame:
     """Per-doc metadata from first-page lines (canara:100-184); ``head_lines``
-    is the materialized (doc_id, arr) from ``lines.head_lines_table``."""
+    is the staged (doc_id, arr) from ``lines.head_lines_frame``."""
     arr = F.col("arr")
     idx = F.transform(arr, lambda l, i: F.struct(l.alias("l"), i.alias("i")))
 
@@ -155,10 +127,10 @@ def metadata(head_lines: DataFrame) -> DataFrame:
                 c = c & l.contains(contains)
             return c
 
-        return F.regexp_extract(_last_line(arr, cond), pat, 1)
+        return F.regexp_extract(last_match(arr, cond), pat, 1)
 
     acc = last_extract("Statement for A/c", None, r"Statement for A/c\s+(\d+)")
-    per_line = _last_line(
+    per_line = last_match(
         arr,
         lambda l: l.startswith("Statement for A/c")
         & l.rlike(r"between\s+\d{2}-[A-Za-z]{3}-\d{4}\s+and\s+\d{2}-[A-Za-z]{3}-\d{4}"),
@@ -193,41 +165,22 @@ def metadata(head_lines: DataFrame) -> DataFrame:
     meta = F.struct(
         F.lit(BANK_NAME).alias("bank_name"),
         F.lit("INR").alias("currency"),
-        _nz(py_strip(last_extract("Name", None, r"Name\s+(.+)"))).alias("customer_name"),
-        _nz(last_extract("Customer Id", None, r"Customer Id\s+(\d+)")).alias("customer_cif_id"),
-        _nz(acc).alias("account_number"),
+        nz(py_strip(last_extract("Name", None, r"Name\s+(.+)"))).alias("customer_name"),
+        nz(last_extract("Customer Id", None, r"Customer Id\s+(\d+)")).alias("customer_cif_id"),
+        nz(acc).alias("account_number"),
         F.lit(None).cast("string").alias("account_type"),
-        _nz(last_extract(None, "IFSC Code", r"IFSC Code\s+([A-Z0-9]+)")).alias("ifsc_code"),
+        nz(last_extract(None, "IFSC Code", r"IFSC Code\s+([A-Z0-9]+)")).alias("ifsc_code"),
         F.lit(None).cast("string").alias("statement_date"),
         period.alias("statement_period"),
-        _nz(last_extract("Phone", None, r"Phone\s+(\+?\d+)")).alias("mobile_number"),
-        _nz(py_strip(last_extract(None, "Branch Name", r"Branch Name\s+(.+)"))).alias(
+        nz(last_extract("Phone", None, r"Phone\s+(\+?\d+)")).alias("mobile_number"),
+        nz(py_strip(last_extract(None, "Branch Name", r"Branch Name\s+(.+)"))).alias(
             "home_branch"
         ),
-        _nz(last_extract(None, "Branch Code", r"Branch Code\s+(\d+)")).alias("branch_code"),
+        nz(last_extract(None, "Branch Code", r"Branch Code\s+(\d+)")).alias("branch_code"),
         address.alias("address"),
         F.lit(None).cast("double").alias("opening_balance"),
     )
     return head_lines.select("doc_id", meta.alias("metadata"))
-
-
-def _nz(c: Column) -> Column:
-    return F.when(c != "", c)
-
-
-def opening_balance(head_lines: DataFrame) -> DataFrame:
-    """P13 — first 'Opening Balance' line of page 1 → float (canara:205-215).
-    (Dead for the output contract — the reference threads it into the page
-    parser but never reads it — kept as a standalone operator for parity.)"""
-    arr = F.col("arr")
-    line = F.try_element_at(F.filter(arr, lambda l: l.startswith("Opening Balance")), F.lit(1))
-    val = F.regexp_extract(line, r"Opening Balance\s+([\d,]+\.?\d*)", 1)
-    return head_lines.select(
-        "doc_id",
-        F.coalesce(
-            F.regexp_replace(val, ",", "").cast("double"), F.lit(0.0)
-        ).alias("opening_balance"),
-    )
 
 
 def summary(txns: DataFrame) -> DataFrame:

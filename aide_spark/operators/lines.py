@@ -1,4 +1,5 @@
-"""P1/P2 — page text extraction + line tokenization (SURVEY.md §2.4).
+"""P1/P2 — page text extraction + line tokenization (SURVEY.md §2.4), and
+the one window skeleton the three bank parsers share.
 
 The reference walks ``pdf_reader.pages[i].extract_text().split('\\n')``
 (union_bank_extractor.py:237-257, canara_bank_extractor.py:186-226,
@@ -10,14 +11,17 @@ span table, so:
 * lines  = ``posexplode`` of text spans + one window over ``doc_id`` to
   assign page numbers (1 + number of page-break spans before the span).
 
-All downstream windows partition by ``doc_id`` (or ``doc_id, page``, which
-hash-partitioning on ``doc_id`` already satisfies), so the whole parse
-pipeline incurs exactly ONE shuffle for the line table.
+Parsers read the line table in ONE order, :func:`doc_window` (``doc_id``
+by ``off``). The reference's per-page loops become that order plus a page
+guard: :func:`page_lead` looks ahead without crossing a page end, and
+:func:`segments` numbers records over the whole doc but groups them per
+page. Every parser window and grouping is keyed by ``doc_id`` first, so the
+hash exchange of the line table is the only shuffle of a parser branch.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window, WindowSpec
 from pyspark.sql import functions as F
 
 from ..schemas import PAGE_BREAK
@@ -136,9 +140,9 @@ def line_table(docs: DataFrame, carry: tuple[str, ...] = ()) -> DataFrame:
 
 def head_lines_frame(docs: DataFrame, two_pages: bool = False) -> DataFrame:
     """(doc_id, arr) — the first-page (or two-page) trimmed line ARRAY as a
-    zero-shuffle chain of array expressions over the spans column —
-    row-for-row identical to ``head_lines_table`` over the exploded line
-    table plus the pipeline's old left-join default (r6).
+    zero-shuffle chain of array expressions over the spans column (r6). It
+    replaced a per-doc ``collect_list`` over the exploded line table plus a
+    left join back to the branch docs, and is row-for-row identical to it.
 
     Equivalences with the join path:
     * lines of pages <= N = text spans (breaks excluded) before the N-th
@@ -147,7 +151,10 @@ def head_lines_frame(docs: DataFrame, two_pages: bool = False) -> DataFrame:
     * a doc with NO qualifying lines maps to the join-miss default the
       pipeline coalesced in ([''] for one page, ['', ''] for two);
     * ``two_pages`` appends the trailing '' of APGVB's page1+page2+'\\n'
-      assembly to non-empty arrays, as ``head_lines_table`` did.
+      assembly to non-empty arrays. An empty page among the first two
+      contributes one extra '' line in the reference's split that the
+      array cannot see — inert, since every metadata probe requires
+      non-empty content (the generator emits such docs; span parity holds).
 
     Motivation (guide §2.4 — remove shuffles outright): the metadata branch
     previously exploded every span of every page, ran the page-number
@@ -189,37 +196,67 @@ def head_lines_frame(docs: DataFrame, two_pages: bool = False) -> DataFrame:
     return staged.select("doc_id", F.explode(F.array(final)).alias("arr"))
 
 
-def head_lines_table(lines: DataFrame, two_pages: bool = False) -> DataFrame:
-    """(doc_id, arr) — the first-page (or two-page) trimmed line ARRAY,
-    materialized through an aggregation barrier.
+def doc_window() -> WindowSpec:
+    """The one line order every parser window uses: a doc's lines by offset."""
+    return Window.partitionBy("doc_id").orderBy("off")
 
-    Metadata extraction probes the line array ~15× per doc; if the array is
-    an inline expression, CollapseProject re-evaluates the whole
-    spans→pages→split pipeline per probe (measured ~50% of total pipeline
-    CPU). Aggregating the already-exploded line table stores the array once;
-    the probes then traverse a dozen stored strings.
 
-    ``two_pages=True`` mirrors APGVB's ``page1+'\\n'+page2+'\\n'`` assembly
-    (apgvb_extractor.py:491-496): lines of pages 1-2 plus one trailing ''
-    from the final newline. An empty page among the first two contributes
-    one extra '' line in the reference's split that the line table cannot
-    see — INERT by construction: every metadata probe requires non-empty
-    content, so '' lines match nothing. Closed by evidence: the generator
-    emits empty-page-2 APGVB docs (~10%) and empty trailing pages (~8%),
-    and span parity stays green (tests/test_parity.py).
+def page_lead(col: str, n: int) -> Column:
+    """``col`` of the line ``n`` ahead on the same page, NULL past the page end
+    (the reference indexes its per-page ``lines`` list)."""
+    w = doc_window()
+    return F.when(F.lead("page", n).over(w) == F.col("page"), F.lead(col, n).over(w))
+
+
+def earlier_in_seg(value: Column) -> Column:
+    """Sum of ``value`` (a condition counts 1) over the earlier lines of the
+    same segment; valid inside :func:`segments`' ``include`` and ``carry``."""
+    w = Window.partitionBy("doc_id", "seg").orderBy("off")
+    before = w.rowsBetween(Window.unboundedPreceding, -1)
+    return F.coalesce(F.sum(value.cast("int")).over(before), F.lit(0))
+
+
+def segments(lines: DataFrame, is_start: Column, include: Column, **carry: Column) -> DataFrame:
+    """Combine a page's lines into records: ``(doc_id, page, seg, text, off,
+    *carry)``, one row per record start; ``off`` is the start line's offset,
+    so :func:`doc_window` orders records as it orders lines.
+
+    ``seg`` is the running count of starts in doc order; grouping by
+    ``(doc_id, page, seg)`` cuts a record at its page end, and groups
+    without their start line (the lines that open a page before its first
+    start) are dropped. ``text`` joins the lines where ``is_start`` or
+    ``include`` holds with ' ', in line order. Each ``carry`` column is set
+    on at most one line of a record and is reduced with ``max``.
     """
-    pages = 2 if two_pages else 1
-    grouped = (
-        lines.where(F.col("page") <= pages)
-        .groupBy("doc_id")
-        .agg(
-            # GetArrayStructFields (codegen) instead of an interpreted
-            # per-element transform lambda (r6, guide §4.1)
-            F.array_sort(F.collect_list(F.struct("off", "line")))
-            .getField("line")
-            .alias("arr")
-        )
+    started = lines.withColumn("_start", is_start).withColumn(
+        "seg",
+        F.sum(F.col("_start").cast("int")).over(
+            doc_window().rowsBetween(Window.unboundedPreceding, Window.currentRow)
+        ),
+    ).where(F.col("seg") >= 1)
+    staged = started.select(
+        "doc_id", "page", "seg", "off", "_start",
+        F.when(F.col("_start") | include, F.struct("off", "line")).alias("_part"),
+        *[c.alias(k) for k, c in carry.items()],
     )
-    if two_pages:
-        grouped = grouped.withColumn("arr", F.concat(F.col("arr"), F.array(F.lit(""))))
-    return grouped
+    return (
+        staged.groupBy("doc_id", "page", "seg")
+        .agg(
+            # nulls (excluded lines) are dropped by collect_list
+            F.array_join(F.array_sort(F.collect_list("_part")).getField("line"), " ").alias("text"),
+            F.min(F.when(F.col("_start"), F.col("off"))).alias("off"),
+            *[F.max(k).alias(k) for k in carry],
+        )
+        .where(F.col("off").isNotNull())
+    )
+
+
+def last_match(arr: Column, cond) -> Column:
+    """Last element of ``arr`` satisfying ``cond`` ('last match wins': the
+    reference metadata loops overwrite a field per matching line)."""
+    return F.try_element_at(F.filter(arr, cond), F.lit(-1))
+
+
+def nz(c: Column) -> Column:
+    """'' → NULL (an unmatched metadata probe)."""
+    return F.when(c != "", c)

@@ -5,8 +5,9 @@ The reference's imperative page/line loops decompose into the four window
 patterns of SURVEY.md §2.10:
 
 * start detection (P4, union:265-266) → ``rlike`` boolean column
-* multi-line combine (P5, union:282-300) → segment id via running
-  ``sum(is_start)`` + cumulative amount-pattern / empty-line counters
+* multi-line combine (P5, union:282-300) → ``lines.segments`` (segment id
+  via running ``sum(is_start)``) + cumulative amount-pattern / empty-line
+  counters from ``lines.earlier_in_seg``
 * record extraction (P6-P8, union:306-353) → ``regexp_extract(_all)`` +
   ``locate``/``substring`` expressions on the combined segment text
 * summary (A1-A6, union:361-389) → ``groupBy(doc_id).agg`` with
@@ -20,10 +21,10 @@ doc_id-hash exchange for the windows (reused) and the final per-doc agg.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .lines import py_strip
+from .lines import doc_window, earlier_in_seg, last_match, nz, py_strip, segments
 
 BANK_NAME = "Union Bank of India"
 
@@ -47,44 +48,25 @@ def transactions(lines: DataFrame) -> DataFrame:
             "_amt_cnt"
         ),
     )
-    w_page = Window.partitionBy("doc_id", "page").orderBy("off")
-    df = staged.withColumn(
-        "seg", F.sum(is_start.cast("int")).over(w_page)
-    ).where(F.col("seg") >= 1)
 
     # combine loop (union:282-300): append following lines while the combined
     # text has <2 amount patterns, stopping at an empty line or the next
     # transaction start. All stop conditions are terminal, so cumulative
     # counters over the segment reproduce the loop exactly.
-    w_seg = Window.partitionBy("doc_id", "page", "seg").orderBy("off")
-    before = w_seg.rowsBetween(Window.unboundedPreceding, -1)
-    cum_amt = F.coalesce(F.sum("_amt_cnt").over(before), F.lit(0))
-    cum_empty = F.coalesce(
-        F.sum((F.col("line") == "").cast("int")).over(before), F.lit(0)
-    )
-    # the combine-stop regex (NEXT_RE, union:294) is LOOSER than the start
+    # The combine-stop regex (NEXT_RE, union:294) is LOOSER than the start
     # regex: a digits+date line without a transaction id stops the combine
     # yet starts no segment — it and everything after it stay excluded
     is_stopper = ~is_start & F.col("_is_next")
-    cum_stop = F.coalesce(F.sum(is_stopper.cast("int")).over(before), F.lit(0))
-    include = is_start | (
+    include = (
         (F.col("line") != "")
         & ~is_stopper
-        & (cum_amt < 2)
-        & (cum_empty == 0)
-        & (cum_stop == 0)
+        & (earlier_in_seg(F.col("_amt_cnt")) < 2)
+        & (earlier_in_seg(F.col("line") == "") == 0)
+        & (earlier_in_seg(is_stopper) == 0)
     )
-    seg_rows = df.withColumn(
-        "part", F.when(include, F.struct("off", "line"))  # nulls dropped by collect_list
-    )
-    segs = seg_rows.groupBy("doc_id", "page", "seg").agg(
-        F.array_join(
-            F.array_sort(F.collect_list("part")).getField("line"), " "
-        ).alias("seg_text"),
-        F.min("off").alias("start_off"),
-    )
+    segs = segments(staged, is_start, include)
 
-    seg_text = F.col("seg_text")
+    seg_text = F.col("text")
     vals = F.regexp_extract_all(seg_text, F.lit(AMT_RE), 1)
     typs = F.regexp_extract_all(seg_text, F.lit(AMT_RE), 2)
     parsed = (
@@ -129,12 +111,7 @@ def transactions(lines: DataFrame) -> DataFrame:
             F.when(F.col("amt_typ") == "Cr", F.lit("Credit")).otherwise(F.lit("Debit")),
         )
         .withColumn("Page_Number", F.col("page").cast("int"))
-        .withColumn(
-            "order",
-            F.row_number()
-            .over(Window.partitionBy("doc_id").orderBy("start_off"))
-            .cast("int"),
-        )
+        .withColumn("order", F.row_number().over(doc_window()).cast("int"))
     )
     return out.select(
         "doc_id", "order", "S_No", "Date", "Transaction_ID", "Remarks", "Amount",
@@ -144,15 +121,11 @@ def transactions(lines: DataFrame) -> DataFrame:
     )
 
 
-def _last_match(arr: Column, cond) -> Column:
-    return F.try_element_at(F.filter(arr, cond), F.lit(-1))
-
-
 def _last_extract(arr: Column, contains: str, pattern: str, group: int = 1) -> Column:
     """Last line that contains the keyword AND matches the pattern → captured
     group ('last match wins': the reference overwrites the dict per matching
     line, union:110-233)."""
-    line = _last_match(
+    line = last_match(
         arr, lambda l: l.contains(contains) & (F.regexp_extract(l, pattern, group) != "")
     )
     return F.regexp_extract(line, pattern, group)
@@ -161,17 +134,18 @@ def _last_extract(arr: Column, contains: str, pattern: str, group: int = 1) -> C
 def metadata(head_lines: DataFrame) -> DataFrame:
     """Per-doc metadata struct from first-page lines (union:100-235).
 
-    ``head_lines`` is (doc_id, arr) from ``lines.head_lines_table`` — a
-    MATERIALIZED array, so the ~15 field probes traverse stored strings
-    instead of re-deriving the page split per probe (CollapseProject would
-    inline an expression-valued array into every consumer)."""
+    ``head_lines`` is (doc_id, arr) from ``lines.head_lines_frame`` — an
+    array STAGED behind a Generate barrier, so the ~15 field probes traverse
+    stored strings instead of re-deriving the page split per probe
+    (CollapseProject would inline an expression-valued array into every
+    consumer)."""
     arr = F.col("arr")
     idx = F.transform(arr, lambda l, i: F.struct(l.alias("l"), i.alias("i")))
 
     name_guard = lambda l: l.startswith("Name") & l.rlike(r"\S\s+\S")  # noqa: E731
     customer_name = py_strip(
         F.regexp_extract(
-            _last_match(
+            last_match(
                 arr,
                 lambda l: name_guard(l)
                 & (F.regexp_extract(l, r"Name\s+([A-Z\s]+)\s+Customer/CIF", 1) != ""),
@@ -181,7 +155,7 @@ def metadata(head_lines: DataFrame) -> DataFrame:
         )
     )
     cif = F.regexp_extract(
-        _last_match(
+        last_match(
             arr,
             lambda l: name_guard(l)
             & (F.regexp_extract(l, r"Customer/CIF ID\s+(\d+)", 1) != ""),
@@ -191,7 +165,7 @@ def metadata(head_lines: DataFrame) -> DataFrame:
     )
 
     # statement period incl. the partial-year lookahead (union:149-203, M6)
-    per = _last_match(idx, lambda x: x["l"].contains("Statement Period"))
+    per = last_match(idx, lambda x: x["l"].contains("Statement Period"))
     pl, pi = per["l"], per["i"]
     full_re = r"(\d{2}/\d{2}/\d{4})\s+To\s+(\d{2}/\d{2}/\d{4})"
     part_re = r"(\d{2}/\d{2}/\d{4})\s+To\s+(\d{2}/\d{2})"
@@ -229,7 +203,7 @@ def metadata(head_lines: DataFrame) -> DataFrame:
     )
 
     # address: window of 5 lines from the last 'Address' line (union:217-233)
-    addr = _last_match(idx, lambda x: x["l"].contains("Address"))
+    addr = last_match(idx, lambda x: x["l"].contains("Address"))
     win5 = F.slice(arr, addr["i"] + 1, 5)  # 0-based i ⇒ lines i..i+4
     kept = F.filter(
         win5,
@@ -257,19 +231,19 @@ def metadata(head_lines: DataFrame) -> DataFrame:
         F.lit("INR").alias("currency"),
         F.when(customer_name != "", customer_name).alias("customer_name"),
         F.when(cif != "", cif).alias("customer_cif_id"),
-        _nz(_last_extract(arr, "Account Number", r"Account Number\s+(\d+)")).alias(
+        nz(_last_extract(arr, "Account Number", r"Account Number\s+(\d+)")).alias(
             "account_number"
         ),
-        _nz(py_strip(_last_extract(arr, "Account Type", r"Account Type\s+([A-Za-z\s]+)"))).alias(
+        nz(py_strip(_last_extract(arr, "Account Type", r"Account Type\s+([A-Za-z\s]+)"))).alias(
             "account_type"
         ),
-        _nz(_last_extract(arr, "IFSC", r"IFSC\s+([A-Z0-9]+)")).alias("ifsc_code"),
-        _nz(_last_extract(arr, "Statement Date", r"Statement Date\s+(\d{2}/\d{2}/\d{4})")).alias(
+        nz(_last_extract(arr, "IFSC", r"IFSC\s+([A-Z0-9]+)")).alias("ifsc_code"),
+        nz(_last_extract(arr, "Statement Date", r"Statement Date\s+(\d{2}/\d{2}/\d{4})")).alias(
             "statement_date"
         ),
         period.alias("statement_period"),
-        _nz(_last_extract(arr, "Mobile No", r"Mobile No\s+(\d+)")).alias("mobile_number"),
-        _nz(py_strip(_last_extract(arr, "Home branch", r"Home branch\s+([A-Z\s]+)"))).alias(
+        nz(_last_extract(arr, "Mobile No", r"Mobile No\s+(\d+)")).alias("mobile_number"),
+        nz(py_strip(_last_extract(arr, "Home branch", r"Home branch\s+([A-Z\s]+)"))).alias(
             "home_branch"
         ),
         F.lit(None).cast("string").alias("branch_code"),
@@ -277,10 +251,6 @@ def metadata(head_lines: DataFrame) -> DataFrame:
         F.lit(None).cast("double").alias("opening_balance"),
     )
     return head_lines.select("doc_id", meta.alias("metadata"))
-
-
-def _nz(c: Column) -> Column:
-    return F.when(c != "", c)
 
 
 def summary(txns: DataFrame) -> DataFrame:

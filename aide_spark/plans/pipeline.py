@@ -3,14 +3,17 @@ SURVEY.md §3).
 
 documents scan → columnar validation (quarantine split) → bank routing (J1:
 the 3-row config dimension collapses to a filter-per-branch dispatch; no
-reflection) → per-bank parse (explode → segmentation windows → record
-expressions) → per-doc metadata + summary aggregates → ordered span emission.
+reflection) → per-bank parse (line explode → doc-ordered line window →
+records → record expressions) → per-doc metadata + summary aggregates →
+ordered span emission.
 
 Scale notes (100 TB, 1000 executors):
 * validation + metadata are per-row projections on the docs table — narrow,
   no shuffle, whole-stage codegen;
-* each parser branch shuffles once on hash(doc_id) for its windows; the
-  grouped segment agg and per-doc windows reuse that exchange;
+* each parser branch reads its lines once and shuffles once, on hash(doc_id)
+  for the line table; every parser window (``lines.doc_window`` and the
+  segment counters) and the per-page record grouping are keyed by doc_id
+  first, so they all reuse that exchange;
 * per-doc work ∝ span count ⇒ page-count skew; call
   :func:`aide_spark.operators.skew.repartition_by_span_count` before parsing
   when the corpus has heavy-tailed docs (SURVEY.md §4.1);
@@ -63,14 +66,6 @@ def parse_all(valid_docs: DataFrame, persist: bool = False) -> dict[str, DataFra
     c_docs = valid_docs.where(F.col("bank_id") == "CANARA")
     a_docs = valid_docs.where(F.col("bank_id") == "APGVB")
 
-    # metadata inputs: the first-page line ARRAY, built in place by
-    # lines.head_lines_frame (r6) — zero-shuffle, staged behind Generate
-    # barriers so nothing is re-evaluated per probe or per element. Docs
-    # whose head pages have no text lines still get a metadata row
-    # (reference: metadata extracted from '' text ⇒ constants only).
-    def meta_input(branch_docs, two_pages=False):
-        return head_lines_frame(branch_docs, two_pages=two_pages)
-
     transactions = (
         union_parser.transactions(u_lines).withColumn("bank_id", F.lit("UNION"))
         .unionByName(
@@ -80,12 +75,15 @@ def parse_all(valid_docs: DataFrame, persist: bool = False) -> dict[str, DataFra
             apgvb_parser.transactions(a_lines).withColumn("bank_id", F.lit("APGVB"))
         )
     )
+    # metadata inputs: the first-page line ARRAY, built in place by
+    # lines.head_lines_frame (r6) — zero-shuffle, staged behind Generate
+    # barriers so nothing is re-evaluated per probe or per element. Docs
+    # whose head pages have no text lines still get a metadata row
+    # (reference: metadata extracted from '' text ⇒ constants only).
     metadata = (
-        union_parser.metadata(meta_input(u_docs))
-        .unionByName(canara_parser.metadata(meta_input(c_docs)))
-        .unionByName(
-            apgvb_parser.metadata(meta_input(a_docs, two_pages=True))
-        )
+        union_parser.metadata(head_lines_frame(u_docs))
+        .unionByName(canara_parser.metadata(head_lines_frame(c_docs)))
+        .unionByName(apgvb_parser.metadata(head_lines_frame(a_docs, two_pages=True)))
     )
     if persist:
         # r6: lazy localCheckpoint instead of .persist(). Both make the

@@ -11,15 +11,26 @@ A FRESH extractor instance is used per document, pinning the APGVB
 ``_previous_balance`` state to the documented fresh-instance behavior
 (apgvb_extractor.py:821-824,856-859 — first record compares against 0.0),
 which is exactly what ``lag(balance, 1, 0.0)`` reproduces.
+
+When the reference cannot be imported, :func:`expected_spans` falls back to
+the recorded span sequences in ``goldens/parity_spans.json`` (provenance in
+that file); a doc without a golden, or goldens recorded under another
+generator version, fails loudly rather than passing vacuously.
 """
 
 from __future__ import annotations
 
+import difflib
+import functools
+import json
 import sys
 import types
+from pathlib import Path
 
-from aide_spark.generator import spans_to_pages
+from aide_spark.generator import GENERATOR_VERSION, spans_to_pages
 from aide_spark.serialize import reference_spans
+
+GOLDENS = Path(__file__).parent / "goldens" / "parity_spans.json"
 
 
 def _install_pypdf_stub() -> None:
@@ -91,9 +102,42 @@ def run_reference(bank_id: str, pages: list[str]) -> dict:
     }
 
 
+@functools.cache
+def _goldens() -> dict:
+    g = json.loads(GOLDENS.read_text())
+    if g["generator_version"] != GENERATOR_VERSION:
+        raise AssertionError(
+            f"{GOLDENS.name} was recorded at generator version "
+            f"{g['generator_version']}, the generator is at {GENERATOR_VERSION}"
+        )
+    return g["docs"]
+
+
+def golden_spans(doc_id: str) -> list[tuple]:
+    docs = _goldens()
+    if doc_id not in docs:
+        raise AssertionError(f"no golden span sequence for {doc_id} in {GOLDENS.name}")
+    return [tuple(s) for s in docs[doc_id]]
+
+
+def span_diff(doc_id: str, expected: list[tuple], actual: list[tuple]) -> str:
+    """Unified diff of two span sequences, one span per line."""
+    fmt = lambda spans: [f"{seq} {kind} {text!r} {ref!r}" for seq, kind, text, ref in spans]  # noqa: E731
+    return "\n".join(
+        difflib.unified_diff(
+            fmt(expected), fmt(actual), f"{doc_id} expected", f"{doc_id} actual", lineterm=""
+        )
+    )
+
+
 def expected_spans(doc: dict) -> list[tuple]:
     """Golden span sequence [(seq, kind, text, media_ref)] for one generator
-    document, per the shared canonical serialization."""
+    document, per the shared canonical serialization: from the reference
+    extractors when they import, else from the recorded goldens."""
+    try:
+        _import_reference()
+    except ModuleNotFoundError:
+        return golden_spans(doc["doc_id"])
     pages = spans_to_pages(doc["spans"])
     result = run_reference(doc["bank_id"], pages)
     media = [(m, off) for (k, _t, m, off) in doc["spans"] if k == "media"]

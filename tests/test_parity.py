@@ -1,7 +1,8 @@
 """Golden span-sequence parity: the Spark pipeline's output spans must equal,
 byte for byte, the sequence produced by running the REFERENCE extractors on
 the same synthesized documents (the north-rule invariant: span-sequence
-equality on (kind, text, media_ref, order))."""
+equality on (kind, text, media_ref, order)). Without the reference, the
+expected sequences come from ``goldens/parity_spans.json``."""
 
 from __future__ import annotations
 
@@ -12,7 +13,7 @@ import pytest
 from aide_spark.generator import corpus, local_corpus_df
 from aide_spark.plans import pipeline
 
-from .reference_oracle import expected_spans
+from .reference_oracle import expected_spans, span_diff
 
 N_DOCS = 72  # covers all 3 banks + two full taxonomy cycles
 
@@ -48,7 +49,7 @@ def _parsed_docs():
 def test_span_sequence_equality(outputs, doc):
     expected = expected_spans(doc)
     actual = outputs["spans"].get(doc["doc_id"], [])
-    assert actual == expected
+    assert actual == expected, span_diff(doc["doc_id"], expected, actual)
 
 
 def test_every_valid_doc_produced_spans(outputs):

@@ -46,17 +46,21 @@ def test_j1_dispatch_broadcasts(spark):
     assert plan.count("BroadcastHashJoin") >= 2
 
 
-def test_parser_branch_shuffle_budget(spark):
-    """Each parser branch: the doc_id-hash exchange must be REUSED by every
-    window/groupBy in the branch (hash(doc_id) satisfies clustering on
-    (doc_id, page) and (doc_id, page, seg))."""
-    from aide_spark.operators import union_parser
+@pytest.mark.parametrize("bank", ["UNION", "CANARA", "APGVB"])
+def test_parser_branch_shuffle_budget(spark, bank):
+    """Each parser branch: the line table's doc_id-hash exchange must be
+    REUSED by every window/groupBy in the branch (hash(doc_id) satisfies
+    clustering on (doc_id, seg), (doc_id, page) and (doc_id, page, seg)),
+    and APGVB reads its lines once — no semi-join back to them."""
+    from aide_spark.operators import apgvb_parser, canara_parser, union_parser
     from aide_spark.operators.lines import line_table
 
+    parser = {"UNION": union_parser, "CANARA": canara_parser, "APGVB": apgvb_parser}[bank]
     docs = local_corpus_df(spark, 24)
-    lines = line_table(docs.where("bank_id = 'UNION'"))
-    n = explain_shuffles(union_parser.transactions(lines))
-    assert n <= 3, f"union parser branch shuffles: {n}"
+    txns = parser.transactions(line_table(docs.where(f"bank_id = '{bank}'")))
+    n = explain_shuffles(txns)
+    assert n == 1, f"{bank} parser branch shuffles: {n}"
+    assert "LeftSemi" not in _plan(txns)
 
 
 def test_full_pipeline_shuffle_budget(spark):
