@@ -18,141 +18,77 @@ Layout:
                    segmentation, the three bank parsers, summary, dedup, similarity)
     plans        - end-to-end pipeline assembly + checkpoint/lineage/resume
     streaming    - Structured Streaming variants
+
+Importing the package starts no Spark job and sets no conf. Sessions that
+run the pipeline add :data:`CODEGEN_CACHE` to their builder and may call
+:func:`warm` once after ``getOrCreate()``.
 """
 
 __version__ = "0.1.0"
 
+import logging
 
-def _raise_codegen_cache_limit() -> None:
-    """Size the JVM codegen class cache to this engine's plan complexity.
+_log = logging.getLogger(__name__)
 
-    One extraction-pipeline run generates ~245 distinct codegen classes
-    (three parser branches × windows/filters/projections + assembly);
-    Spark's compiled-class cache holds only 100 entries
-    (``spark.sql.codegen.cache.maxEntries``, a static conf), so every run
-    evicts and re-Janino-compiles the full set — thread dumps showed task
-    threads serialized behind ``CodeGenerator.compile`` KeyLocks, and the
-    codegen metrics recorded 245 fresh compilations per run (~2.4 s of a
-    7.6 s pipeline execution; 0 compilations and 5.2 s once sized). This
-    is not a local-mode artifact: every executor JVM of a cluster pays the
-    same per-stage recompiles. The conf is static, so it cannot be set
-    post-session via the public API; the engine sizes it on the session's
-    own SQLConf at import, BEFORE the first code generation builds the
-    cache (the cache captures the limit lazily at first use). Harmless
-    no-op if codegen already ran or the internal accessor is unavailable.
-    Parameterised via ``SPARK_GRAFT_CODEGEN_CACHE`` (default 2000 —
-    comfortably above the engine's class count, a few hundred KB of
-    metaspace per JVM)."""
-    try:
-        import os as _os
-
-        from pyspark.sql import SparkSession
-
-        s = SparkSession.getActiveSession()
-        if s is None:
-            return
-        n = int(_os.environ.get("SPARK_GRAFT_CODEGEN_CACHE", "2000"))
-        jconf = s._jvm.org.apache.spark.sql.internal.SQLConf.get()
-        if jconf.codegenCacheMaxEntries() < n:
-            jconf.setConfString("spark.sql.codegen.cache.maxEntries", str(n))
-    except Exception:  # pragma: no cover — no session / API drift
-        pass
+# Builder config for sessions that run the extraction pipeline. One run
+# generates ~245 codegen classes; Spark's compiled-class cache holds 100 by
+# default, so every run evicts and re-compiles them (~2.4 s of a 7.6 s
+# pipeline run in r6). A 300-doc run repeated in one local[4] session
+# compiled 249 classes again at 100 entries and 0 at 2000 (Spark 4.1.2).
+# The conf is static: set it on the builder, before the session exists.
+CODEGEN_CACHE = ("spark.sql.codegen.cache.maxEntries", "2000")
 
 
-def _warm_collation_runtime() -> None:
-    """Force Spark 4's one-time ICU case-mapping class init at import.
-
-    Spark 4.x routes ``lower()``/``upper()``/``initcap()`` through ICU case
-    mappings; the FIRST evaluation in a JVM pays the static initializer of
-    ``CollationAwareUTF8String`` (builds the ICU title-case tables — ~2 s of
-    CPU on an idle core, 7-11 s when the init lands inside a task on a busy
-    32-thread stage; root-caused via thread dumps, see OPTIMIZATION_r06.md).
-    That is per-JVM library initialization — the same amortize-to-zero class
-    as JIT warm-up — so trigger it at package import, where a session already
-    exists for every entry path (bench, driver, tests), instead of letting it
-    land inside whichever query happens to touch case mapping first. The
-    constant-folded 1-row query below evaluates ``lower`` on the driver,
-    which in local mode IS the executor JVM; on a real cluster each executor
-    pays its own first-task init once per process, exactly like JIT.
-    No data is read and nothing is cached — this loads a class, nothing else.
-    """
-    try:
-        from pyspark.sql import SparkSession
-
-        s = SparkSession.getActiveSession()
-        if s is not None:
-            s.sql("SELECT lower('Σ') AS w").collect()
-    except Exception:  # pragma: no cover — no session / worker-side import
-        pass
+def _warm_collation(spark) -> None:
+    """Spark 4 routes lower/upper/initcap through ICU; the first call in a
+    JVM pays its case-table init (~2 s on an idle core, 7-11 s inside a busy
+    stage, OPTIMIZATION_r06.md). A constant-folded 1-row query pays it on
+    the driver, which is the executor JVM in local mode."""
+    spark.sql("SELECT lower('Σ') AS w").collect()
 
 
-def _warm_codegen_infra() -> None:
-    """Load the JVM code-generation/operator infrastructure at import.
+def _warm_codegen(spark) -> None:
+    """The first whole-stage compilation loads Janino and the aggregate,
+    broadcast-join, window and sort operator classes (~0.5-1 s). A 4-row
+    in-memory query exercises each of them once."""
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
 
-    The first whole-stage-codegen compilation in a JVM loads and JITs the
-    Janino compiler plus the exec-operator class families (hash aggregate,
-    sort, window, broadcast join) — ~0.5-1 s charged to whichever query
-    runs first in a fresh session. One 4-row in-memory query (no files,
-    not any declared query; its generated classes are its own) exercises
-    aggregate → broadcast join → window → sort once so the compiler and
-    operator machinery are resident before the first real query. Same
-    amortize-to-zero per-JVM class as the ICU/worker warms: at 100 TB every
-    executor JVM pays this once per process regardless of queries."""
-    try:
-        from pyspark.sql import SparkSession, Window
-        from pyspark.sql import functions as F
-
-        s = SparkSession.getActiveSession()
-        if s is None:
-            return
-        base = s.range(0, 4, 1, 2).select(
-            (F.col("id") % 2).alias("k"), F.col("id").alias("v")
-        )
-        agg = base.groupBy("k").agg(F.sum("v").alias("sv"))
-        w = Window.partitionBy("k").orderBy("v")
-        out = (
-            base.join(F.broadcast(agg), "k")
-            .withColumn("rn", F.row_number().over(w))
-            .orderBy("k", "rn")
-        )
-        out.write.format("noop").mode("overwrite").save()
-    except Exception:  # pragma: no cover — no session / worker-side import
-        pass
+    base = spark.range(0, 4, 1, 2).select((F.col("id") % 2).alias("k"), F.col("id").alias("v"))
+    agg = base.groupBy("k").agg(F.sum("v").alias("sv"))
+    out = (
+        base.join(F.broadcast(agg), "k")
+        .withColumn("rn", F.row_number().over(Window.partitionBy("k").orderBy("v")))
+        .orderBy("k", "rn")
+    )
+    out.write.format("noop").mode("overwrite").save()
 
 
 def _worker_warm_pass(it):
-    """Identity pass-through for the worker-pool warm below; module-level so
-    executors pickle it by reference and perform the package import."""
+    """Identity pass for the worker warm; module-level so executors pickle
+    it by reference and perform the package import."""
     import aide_spark.queries  # noqa: F401 — the cost being prewarmed
 
     yield from it
 
 
-def _warm_python_workers() -> None:
-    """Pre-spawn the Python worker pool at import, outside any query.
-
-    The first Arrow-batched query in a session pays worker startup: fork of
-    one Python worker per core plus ``import aide_spark.queries`` (and
-    pandas/pyarrow) in each — ~2-3 s wall on 32 cores, all charged to
-    whichever query touches the Python boundary first. Workers are reused
-    (``spark.python.worker.reuse`` default), so one trivial mapInPandas job
-    over ``defaultParallelism`` partitions warms the pool once per session.
-    Same amortize-to-zero class as the JIT/ICU warm-up above: per-process
-    infrastructure, no data read, nothing cached."""
-    try:
-        from pyspark.sql import SparkSession
-
-        s = SparkSession.getActiveSession()
-        if s is None:
-            return
-        n = s.sparkContext.defaultParallelism
-        df = s.range(0, n, 1, n).mapInPandas(_worker_warm_pass, "id long")
-        df.write.format("noop").mode("overwrite").save()
-    except Exception:  # pragma: no cover — no session / worker-side import
-        pass
+def _warm_python_workers(spark) -> None:
+    """The first Arrow-batched query forks one Python worker per core and
+    imports this package in each (~2-3 s on 32 cores): the fixed boundary
+    cost, apart from any UDF body. Workers are reused, so one mapInPandas
+    job over ``defaultParallelism`` partitions pays it once per session."""
+    n = spark.sparkContext.defaultParallelism
+    df = spark.range(0, n, 1, n).mapInPandas(_worker_warm_pass, "id long")
+    df.write.format("noop").mode("overwrite").save()
 
 
-_raise_codegen_cache_limit()
-_warm_collation_runtime()
-_warm_codegen_infra()
-_warm_python_workers()
+def warm(spark) -> None:
+    """Pay the per-JVM and per-worker start-up costs of ``spark`` up front:
+    ICU case mapping, the codegen/operator classes and the Python worker
+    pool. Reads no data and caches nothing. A failed warm is logged and the
+    rest still run; a session without them is only slower on first use."""
+    for warm_one in (_warm_collation, _warm_codegen, _warm_python_workers):
+        try:
+            warm_one(spark)
+        except Exception:
+            _log.warning("aide_spark.warm: %s failed", warm_one.__name__, exc_info=True)

@@ -19,6 +19,8 @@ on the pair endpoints.
 
 from __future__ import annotations
 
+import warnings
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -261,6 +263,17 @@ def simhash_hamming_pairs(
     )
 
 
+def _free_ckpt(df) -> None:
+    """Release the block behind a ``localCheckpoint`` frame through its
+    LogicalRDD's backing rdd (unpersisting a derived frame would be a silent
+    no-op). A failed release leaves the block to the context cleaner, so it
+    warns rather than raises."""
+    try:
+        df._jdf.queryExecution().analyzed().rdd().unpersist(False)
+    except Exception as e:
+        warnings.warn(f"could not release a components checkpoint: {e!r}", RuntimeWarning)
+
+
 def connected_components(
     pairs: DataFrame,
     nodes: DataFrame,
@@ -330,9 +343,15 @@ def connected_components(
     # scale the SAME formula widens the loop with the edge count. The bench's
     # AQE partition coalescing is off, so derive the width from the measured
     # edge count directly: ~500k edges per task, capped by the session
-    # setting (the cluster-sized upper bound), floored at 1.
+    # setting (the cluster-sized upper bound). Every join and aggregate input
+    # of the loop is repartitioned to it by its key, so the session's own
+    # setting is never touched. The floor is 2: repartition(1, key) plans as
+    # SinglePartition, and the planner re-shuffled those loop joins at the
+    # session width instead (6x the tasks on a 20k-node graph).
     conf_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    n_parts = max(1, min(conf_parts, -(-(n_pairs * 2) // 500_000)))
+    n_parts = min(conf_parts, max(2, -(-(n_pairs * 2) // 500_000)))
+    # every round joins the edges on src: shuffle them to the loop width once
+    src_edges = edges.repartition(n_parts, "src").persist()
     labels = nodes.select(F.col(id_col).alias("node"), F.col(id_col).alias("label"))
 
     # --- lineage management (the round-4 OOM lesson) -----------------------
@@ -345,62 +364,50 @@ def connected_components(
     # the plan to a LogicalRDD leaf every round (the GraphFrames recipe; on
     # a real cluster prefer reliable checkpoint(dir) — localCheckpoint dies
     # with an executor). The checkpointed block of the PREVIOUS round is
-    # released eagerly via the LogicalRDD's backing rdd — unpersisting a
-    # derived frame would be the silent no-op documented below.
-    def _free_ckpt(df) -> None:
-        try:
-            df._jdf.queryExecution().analyzed().rdd().unpersist(False)
-        except Exception:  # pragma: no cover — best-effort release
-            pass
-
+    # released eagerly via _free_ckpt.
     prev_ckpt = None
     changed = 0
-    # the width override is scoped to the loop and restored in the finally
-    # below; the bench/driver session runs queries sequentially, so the
-    # temporary session setting cannot leak into a concurrent query
-    saved_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n_parts))
-    try:
-        for _ in range(max_iterations):
-            prop = (
-                edges.join(labels, edges.src == labels.node)
-                .groupBy(F.col("dst").alias("node"))
-                .agg(F.min("label").alias("_nbr"))
-            )
-            stepped = labels.join(prop, "node", "left").select(
-                "node",
-                F.least("label", "_nbr").alias("_sl"),
-                F.col("label").alias("_old"),
-            )
-            # pointer jump: shortcut to the label's own label (path
-            # compression; labels are node ids, so the self-join hits every
-            # row — left join only guards a label outside the node universe)
-            lk = stepped.select(
-                F.col("node").alias("_pn"), F.col("_sl").alias("_pl")
-            )
-            new_labels = stepped.join(
-                lk, stepped["_sl"] == lk["_pn"], "left"
-            ).select(
+    for _ in range(max_iterations):
+        lab = labels.repartition(n_parts, "node")
+        prop = (
+            src_edges.join(lab, F.col("src") == F.col("node"))
+            .repartition(n_parts, "dst")
+            .groupBy(F.col("dst").alias("node"))
+            .agg(F.min("label").alias("_nbr"))
+        )
+        stepped = lab.join(prop, "node", "left").select(
+            "node",
+            F.least("label", "_nbr").alias("_sl"),
+            F.col("label").alias("_old"),
+        )
+        # pointer jump: shortcut to the label's own label (path compression;
+        # labels are node ids, so the self-join hits every row — left join
+        # only guards a label outside the node universe)
+        lk = stepped.select(F.col("node").alias("_pn"), F.col("_sl").alias("_pl"))
+        new_labels = (
+            stepped.repartition(n_parts, "_sl")
+            .join(lk.repartition(n_parts, "_pn"), F.col("_sl") == F.col("_pn"), "left")
+            .select(
                 "node",
                 F.least(F.col("_sl"), F.coalesce("_pl", "_sl")).alias("label"),
                 "_old",
             )
-            # lazy checkpoint + FULL count in one job: the count computes
-            # every partition (materializing the checkpoint completely —
-            # a limit(1) probe could leave partitions uncheckpointed whose
-            # later recompute would chase the freed previous round) and is
-            # itself the convergence signal, replacing the separate eager
-            # materialization job per round (r6)
-            ck = new_labels.localCheckpoint(eager=False)
-            changed = ck.where(F.col("label") != F.col("_old")).count()
-            if prev_ckpt is not None:
-                _free_ckpt(prev_ckpt)
-            prev_ckpt = ck
-            labels = ck.select("node", "label")
-            if changed == 0:
-                break
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", saved_parts)
+        )
+        # lazy checkpoint + FULL count in one job: the count computes every
+        # partition (materializing the checkpoint completely — a limit(1)
+        # probe could leave partitions uncheckpointed whose later recompute
+        # would chase the freed previous round) and is itself the
+        # convergence signal, replacing the separate eager materialization
+        # job per round (r6)
+        ck = new_labels.localCheckpoint(eager=False)
+        changed = ck.where(F.col("label") != F.col("_old")).count()
+        if prev_ckpt is not None:
+            _free_ckpt(prev_ckpt)
+        prev_ckpt = ck
+        labels = ck.select("node", "label")
+        if changed == 0:
+            break
+    src_edges.unpersist()
     edges.unpersist()
     if changed != 0:
         msg = (
@@ -411,8 +418,6 @@ def connected_components(
             if prev_ckpt is not None:
                 _free_ckpt(prev_ckpt)
             raise RuntimeError(msg)
-        import warnings
-
         warnings.warn(msg, RuntimeWarning, stacklevel=2)
     # hand the caller a frame whose OWN plan is the cached one, so the
     # caller's .unpersist() actually frees it: cache the aliased projection,

@@ -9,10 +9,15 @@ the *registrable* domain (eTLD+1), not the raw host — ``a.github.io``
 and ``b.github.io`` are different sites, ``news.bbc.co.uk`` and
 ``www.bbc.co.uk`` are one.
 
-All pure Column expressions (anchored regexes + array higher-order
-functions — each anchored pattern matches at most once, so Spark's
-replace-all and DuckDB's replace-first agree). No UDFs, no shuffle: this
-is a projection that fuses into whatever scan or join surrounds it.
+Each transform is one SQL expression over column names, parsed once with
+``F.expr`` (r6: building the same trees as Column objects through py4j cost
+~1 s per call for the staged resolve→canonicalize→host→domain chain).
+Anchored regexes + array higher-order functions — each anchored pattern
+matches at most once, so Spark's replace-all and DuckDB's replace-first
+agree. No UDFs, no shuffle: this is a projection that fuses into whatever
+scan or join surrounds it. Callers stage a chain behind one projection per
+step (see ``queries.web_domain_outdegree``): each step reads its input
+several times, so nesting the calls would copy the inner expression.
 
 The suffix table is a trimmed, inlined subset of the public-suffix list
 (publicsuffix.org, public domain data) — the mechanism (longest-suffix
@@ -42,24 +47,25 @@ TWO_LABEL_SUFFIXES = [
 TRACKING_PARAM_RE = r"^(utm_[A-Za-z0-9_]*|gclid|fbclid|msclkid|mc_eid|ref|igshid)="
 
 
-# ---------------------------------------------------------------------------
-# SQL-text twins (r6): the Column builders below construct large expression
-# trees through py4j — ~1 s per call for the staged resolve→canonicalize→
-# host→domain chain, paid INSIDE the per-query clock. These emit the same
-# expressions as SQL text for a single F.expr parse; inputs are plain column
-# names, and equivalence with the Column builders is pinned by
-# tests/test_webpipeline.py::test_weblinks_sql_twins_match_columns.
-# ---------------------------------------------------------------------------
-
-
 def _sql_str(s: str) -> str:
     """Spark SQL string literal (backslash escapes are ACTIVE in SQL text,
     so regex backslashes must double)."""
     return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
-def canonicalize_url_sql(u: str) -> str:
-    """SQL twin of :func:`canonicalize_url`; ``u`` is a column name."""
+def canonicalize_url(u: str) -> Column:
+    """Canonical form of the absolute http(s)-style URL in column ``u``:
+
+    * scheme and host lowercased;
+    * default port dropped (``:80`` for http, ``:443`` for https; other
+      ports kept);
+    * fragment removed;
+    * tracking query parameters removed, survivors sorted bytewise;
+    * empty path → ``/``.
+
+    Strings without a scheme pass through unchanged (callers resolve
+    relative hrefs first — see :func:`resolve_href`).
+    """
     sch = _sql_str(_SCHEME_RE)
     nofrag = f"regexp_replace({u}, '#.*$', '')"
     scheme = f"lower(regexp_extract({nofrag}, {sch}, 1))"
@@ -88,11 +94,12 @@ def canonicalize_url_sql(u: str) -> str:
         f"CASE WHEN size({params}) > 0 "
         f"THEN concat('?', array_join({params}, '&')) ELSE '' END)"
     )
-    return f"CASE WHEN {u} RLIKE {sch} THEN {canon} ELSE {u} END"
+    return F.expr(f"CASE WHEN {u} RLIKE {sch} THEN {canon} ELSE {u} END")
 
 
-def url_host_sql(u: str) -> str:
-    """SQL twin of :func:`url_host`."""
+def url_host(u: str) -> Column:
+    """Lowercase host of the absolute URL in column ``u`` ('' when there is
+    no scheme)."""
     sch = _sql_str(_SCHEME_RE)
     after = f"regexp_replace(regexp_replace({u}, '#.*$', ''), {sch}, '')"
     strip_port = _sql_str(r":\d+$")
@@ -100,18 +107,21 @@ def url_host_sql(u: str) -> str:
         f"lower(regexp_replace(regexp_extract({after}, '^([^/?]*)', 1), "
         f"{strip_port}, ''))"
     )
-    return f"CASE WHEN {u} RLIKE {sch} THEN {host} ELSE '' END"
+    return F.expr(f"CASE WHEN {u} RLIKE {sch} THEN {host} ELSE '' END")
 
 
-def registrable_domain_sql(h: str) -> str:
-    """SQL twin of :func:`registrable_domain`."""
+def registrable_domain(h: str) -> Column:
+    """eTLD+1 of the hostname in column ``h`` via longest-suffix match
+    against the inlined PSL subset: if the last two labels form a listed
+    suffix the registrable domain is three labels, else two (bare and
+    single-label hosts pass through)."""
     dot = _sql_str(r"\.")
     labels = f"split(lower({h}), {dot})"
     n = f"size({labels})"
     last2 = f"array_join(slice({labels}, {n} - 1, 2), '.')"
     last3 = f"array_join(slice({labels}, {n} - 2, 3), '.')"
     suffixes = ", ".join(f"'{s}'" for s in TWO_LABEL_SUFFIXES)
-    return (
+    return F.expr(
         f"CASE WHEN {n} <= 1 THEN lower({h}) "
         f"WHEN {n} >= 3 AND {last2} IN ({suffixes}) THEN {last3} "
         f"ELSE {last2} END"
@@ -119,7 +129,10 @@ def registrable_domain_sql(h: str) -> str:
 
 
 def _remove_dot_segments_sql(p: str) -> str:
-    """SQL twin of :func:`remove_dot_segments`; ``p`` is a SQL expression."""
+    """SQL text of :func:`remove_dot_segments`; ``p`` is a SQL expression.
+    An ``aggregate`` fold with an array accumulator: pop on ``..``, skip
+    ``.`` and empty interior segments. All segments popped or skipped gives
+    ``/``; a directory-form input keeps its trailing slash."""
     segs = f"split({p}, '/')"
     folded = (
         f"aggregate({segs}, CAST(array() AS ARRAY<STRING>), "
@@ -140,8 +153,25 @@ def _remove_dot_segments_sql(p: str) -> str:
     )
 
 
-def resolve_href_sql(b: str, h: str) -> str:
-    """SQL twin of :func:`resolve_href`; ``b``/``h`` are column names."""
+def remove_dot_segments(p: str) -> Column:
+    """RFC 3986 §5.2.4 over the path in column ``p``: ``/a/b/../c`` →
+    ``/a/c``, entirely JVM-side."""
+    return F.expr(_remove_dot_segments_sql(p))
+
+
+def resolve_href(b: str, h: str) -> Column:
+    """Resolve the outlink href in column ``h`` against the page URL in
+    column ``b`` (RFC 3986 merge, dot segments removed):
+
+    * absolute (``scheme://``) hrefs pass through;
+    * ``//host/...`` takes the base's scheme;
+    * ``/path`` is origin-relative;
+    * anything else merges onto the base path's directory.
+
+    ``b`` must be absolute; fragment-only hrefs resolve to the base without
+    its fragment (same-page links are not new graph edges — callers usually
+    filter them).
+    """
     sch = _sql_str(_SCHEME_RE)
     scheme = f"lower(regexp_extract({b}, {sch}, 1))"
     nofrag = f"regexp_replace({b}, '#.*$', '')"
@@ -157,7 +187,7 @@ def resolve_href_sql(b: str, h: str) -> str:
     )
     hp = f"regexp_extract({h}, '^([^?#]*)', 1)"
     hq = f"regexp_extract({h}, '([?#].*)$', 1)"
-    return (
+    return F.expr(
         f"CASE WHEN {h} RLIKE {sch} THEN {h} "
         f"WHEN {h} RLIKE '^//' THEN concat({scheme}, ':', {h}) "
         f"WHEN {h} RLIKE '^#' THEN concat({origin}, {base_path}, {h}) "
@@ -165,142 +195,4 @@ def resolve_href_sql(b: str, h: str) -> str:
         f"THEN concat({origin}, {_remove_dot_segments_sql(hp)}, {hq}) "
         f"ELSE concat({origin}, "
         f"{_remove_dot_segments_sql(f'concat({base_dir}, {hp})')}, {hq}) END"
-    )
-
-
-def canonicalize_url(url: Column) -> Column:
-    """Canonical form of an absolute http(s)-style URL:
-
-    * scheme and host lowercased;
-    * default port dropped (``:80`` for http, ``:443`` for https; other
-      ports kept);
-    * fragment removed;
-    * tracking query parameters removed, survivors sorted bytewise;
-    * empty path → ``/``.
-
-    Strings without a scheme pass through unchanged (callers resolve
-    relative hrefs first — see :func:`resolve_href`).
-    """
-    has_scheme = url.rlike(_SCHEME_RE)
-    nofrag = F.regexp_replace(url, r"#.*$", "")
-    scheme = F.lower(F.regexp_extract(nofrag, _SCHEME_RE, 1))
-    after = F.regexp_replace(nofrag, _SCHEME_RE, "")
-    hostport = F.regexp_extract(after, r"^([^/?]*)", 1)
-    host = F.lower(F.regexp_replace(hostport, r":\d+$", ""))
-    port = F.regexp_extract(hostport, r":(\d+)$", 1)
-    keep_port = (port != "") & ~(
-        ((scheme == "http") & (port == "80"))
-        | ((scheme == "https") & (port == "443"))
-    )
-    pathq = F.regexp_replace(after, r"^[^/?]*", "")
-    path = F.regexp_extract(pathq, r"^([^?]*)", 1)
-    path = F.when(path == "", F.lit("/")).otherwise(path)
-    query = F.regexp_extract(pathq, r"\?(.*)$", 1)
-    params = F.array_sort(
-        F.filter(
-            F.split(query, "&"),
-            lambda p: (p != "") & ~p.rlike(TRACKING_PARAM_RE),
-        )
-    )
-    canon = F.concat(
-        scheme,
-        F.lit("://"),
-        host,
-        F.when(keep_port, F.concat(F.lit(":"), port)).otherwise(F.lit("")),
-        path,
-        F.when(
-            F.size(params) > 0, F.concat(F.lit("?"), F.array_join(params, "&"))
-        ).otherwise(F.lit("")),
-    )
-    return F.when(has_scheme, canon).otherwise(url)
-
-
-def registrable_domain(host: Column) -> Column:
-    """eTLD+1 of a lowercase hostname via longest-suffix match against the
-    inlined PSL subset: if the last two labels form a listed suffix the
-    registrable domain is three labels, else two (bare/single-label hosts
-    pass through)."""
-    labels = F.split(F.lower(host), r"\.")
-    n = F.size(labels)
-    last2 = F.array_join(F.slice(labels, n - 1, 2), ".")
-    last3 = F.array_join(F.slice(labels, n - 2, 3), ".")
-    return (
-        F.when(n <= 1, F.lower(host))
-        .when((n >= 3) & last2.isin(*TWO_LABEL_SUFFIXES), last3)
-        .otherwise(last2)
-    )
-
-
-def url_host(url: Column) -> Column:
-    """Lowercase host of an absolute URL ('' when there is no scheme)."""
-    after = F.regexp_replace(F.regexp_replace(url, r"#.*$", ""), _SCHEME_RE, "")
-    return F.when(
-        url.rlike(_SCHEME_RE),
-        F.lower(F.regexp_replace(F.regexp_extract(after, r"^([^/?]*)", 1), r":\d+$", "")),
-    ).otherwise(F.lit(""))
-
-
-def remove_dot_segments(path: Column) -> Column:
-    """RFC 3986 §5.2.4 over a path Column: ``/a/b/../c`` → ``/a/c`` —
-    an ``aggregate`` fold with an array accumulator (pop on ``..``, skip
-    on ``.``/empty interior segments), entirely JVM-side."""
-    segs = F.split(path, "/")
-    folded = F.aggregate(
-        segs,
-        F.array().cast("array<string>"),
-        lambda acc, s: F.when(s == "..", F.slice(acc, 1, F.greatest(F.size(acc) - 1, F.lit(0))))
-        .when((s == ".") | (s == ""), acc)
-        .otherwise(F.concat(acc, F.array(s))),
-    )
-    trail = F.when(
-        F.element_at(segs, -1).isin("", ".", ".."), F.lit("/")
-    ).otherwise(F.lit(""))
-    joined = F.concat(F.lit("/"), F.array_join(folded, "/"))
-    # all segments popped/skipped -> "/"; otherwise append the trailing
-    # slash a directory-form input implies
-    return F.when(F.size(folded) == 0, F.lit("/")).otherwise(
-        F.when(trail == "/", F.concat(joined, trail)).otherwise(joined)
-    )
-
-
-def resolve_href(base: Column, href: Column) -> Column:
-    """Resolve an outlink href against its page URL (RFC 3986 merge,
-    dot segments removed):
-
-    * absolute (``scheme://``) hrefs pass through;
-    * ``//host/...`` takes the base's scheme;
-    * ``/path`` is origin-relative;
-    * anything else merges onto the base path's directory.
-
-    ``base`` must be absolute; fragments-only hrefs resolve to the base
-    without its fragment (same-page links are not new graph edges —
-    callers usually filter them).
-    """
-    scheme = F.lower(F.regexp_extract(base, _SCHEME_RE, 1))
-    nofrag = F.regexp_replace(base, r"#.*$", "")
-    after = F.regexp_replace(nofrag, _SCHEME_RE, "")
-    hostport = F.lower(F.regexp_extract(after, r"^([^/?]*)", 1))
-    origin = F.concat(scheme, F.lit("://"), hostport)
-    base_path = F.regexp_extract(F.regexp_replace(after, r"^[^/?]*", ""), r"^([^?]*)", 1)
-    base_dir = F.when(
-        base_path.rlike("/"), F.regexp_replace(base_path, r"/[^/]*$", "/")
-    ).otherwise(F.lit("/"))
-    return (
-        F.when(href.rlike(_SCHEME_RE), href)
-        .when(href.rlike("^//"), F.concat(scheme, F.lit(":"), href))
-        .when(href.rlike("^#"), F.concat(origin, base_path, href))
-        .when(
-            href.rlike("^/"),
-            F.concat(origin, remove_dot_segments(F.regexp_extract(href, r"^([^?#]*)", 1)),
-                     F.regexp_extract(href, r"([?#].*)$", 1)),
-        )
-        .otherwise(
-            F.concat(
-                origin,
-                remove_dot_segments(
-                    F.concat(base_dir, F.regexp_extract(href, r"^([^?#]*)", 1))
-                ),
-                F.regexp_extract(href, r"([?#].*)$", 1),
-            )
-        )
     )

@@ -2999,10 +2999,10 @@ def url_canonicalize(spark, sf_dir):
         ),
         (F.col("doc_id") % 6 + 1).cast("int"),
     )
-    return d.select(
-        "doc_id",
-        canonicalize_url(url).alias("canonical_url"),
-        registrable_domain(url_host(url)).alias("domain"),
+    return (
+        d.select("doc_id", url.alias("url"))
+        .select("doc_id", canonicalize_url("url").alias("canonical_url"), url_host("url").alias("h"))
+        .select("doc_id", "canonical_url", registrable_domain("h").alias("domain"))
     )
 
 
@@ -3044,17 +3044,12 @@ def web_domain_outdegree(spark, sf_dir):
     # of the regex/fold tree in one expression — seconds of construction
     # and duplicated evaluation). Multi-referenced non-cheap aliases are
     # not re-inlined by CollapseProject, so each stage evaluates once.
-    # Each stage is the SQL-text twin of its Column builder (one F.expr
-    # parse instead of ~1 s of py4j Column construction; equivalence pinned
-    # in tests/test_webpipeline.py).
-    from .operators import weblinks as W
-
     resolved = (
         links.withColumn("_b", base)
-        .select(F.expr(W.resolve_href_sql("_b", "href")).alias("r"))
-        .select(F.expr(W.canonicalize_url_sql("r")).alias("u"))
-        .select(F.expr(W.url_host_sql("u")).alias("h"))
-        .select(F.expr(W.registrable_domain_sql("h")).alias("domain"))
+        .select(resolve_href("_b", "href").alias("r"))
+        .select(canonicalize_url("r").alias("u"))
+        .select(url_host("u").alias("h"))
+        .select(registrable_domain("h").alias("domain"))
     )
     return resolved.groupBy("domain").agg(
         F.count("*").cast("long").alias("n_links")

@@ -56,9 +56,12 @@ HEADLINE = [
 
 
 def build_spark(cpus: int):
+    """The bench session with ``aide_spark``'s codegen cache size, warmed."""
     from pyspark.sql import SparkSession
 
-    return (
+    import aide_spark
+
+    spark = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(f"aide-spark-bench-{cpus}")
         .config("spark.sql.shuffle.partitions", str(max(cpus, 8)))
@@ -71,8 +74,11 @@ def build_spark(cpus: int):
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
+        .config(*aide_spark.CODEGEN_CACHE)
         .getOrCreate()
     )
+    aide_spark.warm(spark)
+    return spark
 
 
 def drain(df) -> int:

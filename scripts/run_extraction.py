@@ -82,10 +82,13 @@ def main() -> None:
 
     from pyspark.sql import SparkSession
 
-    builder = SparkSession.builder.appName("aide-spark-extract")
+    import aide_spark
+
+    builder = SparkSession.builder.appName("aide-spark-extract").config(*aide_spark.CODEGEN_CACHE)
     if args.shuffle_partitions:
         builder = builder.config("spark.sql.shuffle.partitions", args.shuffle_partitions)
     spark = builder.getOrCreate()
+    aide_spark.warm(spark)
 
     from aide_spark.plans.checkpoint import SnapshotStore, run_with_resume
 

@@ -15,7 +15,9 @@ which is exactly what ``lag(balance, 1, 0.0)`` reproduces.
 When the reference cannot be imported, :func:`expected_spans` falls back to
 the recorded span sequences in ``goldens/parity_spans.json`` (provenance in
 that file); a doc without a golden, or goldens recorded under another
-generator version, fails loudly rather than passing vacuously.
+generator version, fails loudly rather than passing vacuously. The
+validation and formatter parity tests fall back the same way to
+``goldens/reference_values.json`` through :func:`expected_values`.
 """
 
 from __future__ import annotations
@@ -31,6 +33,7 @@ from aide_spark.generator import GENERATOR_VERSION, spans_to_pages
 from aide_spark.serialize import reference_spans
 
 GOLDENS = Path(__file__).parent / "goldens" / "parity_spans.json"
+REFERENCE_VALUES = Path(__file__).parent / "goldens" / "reference_values.json"
 
 
 def _install_pypdf_stub() -> None:
@@ -103,18 +106,51 @@ def run_reference(bank_id: str, pages: list[str]) -> dict:
 
 
 @functools.cache
-def _goldens() -> dict:
-    g = json.loads(GOLDENS.read_text())
+def _load_goldens(path: Path) -> dict:
+    g = json.loads(path.read_text())
     if g["generator_version"] != GENERATOR_VERSION:
         raise AssertionError(
-            f"{GOLDENS.name} was recorded at generator version "
+            f"{path.name} was recorded at generator version "
             f"{g['generator_version']}, the generator is at {GENERATOR_VERSION}"
         )
-    return g["docs"]
+    return g
+
+
+def reference_available() -> bool:
+    try:
+        _import_reference()
+    except ModuleNotFoundError:
+        return False
+    return True
+
+
+def _tupled(v):
+    return tuple(v) if isinstance(v, list) else v
+
+
+def expected_values(section: str, from_reference) -> dict:
+    """Expected ``{case key: value}`` for one parity test: ``from_reference()``
+    when the reference imports, else the section's recorded ``[key, value]``
+    pairs (lists read back as tuples)."""
+    if reference_available():
+        return from_reference()
+    pairs = _load_goldens(REFERENCE_VALUES)[section]
+    return {_tupled(k): _tupled(v) for k, v in pairs}
+
+
+def assert_cases_match(want: dict, got: dict) -> None:
+    """Every expected case is present in ``got`` with an equal value; on a
+    mismatch, fail listing each differing case."""
+    bad = [
+        f"  {k!r}: expected {v!r}, got {got.get(k, '<missing>')!r}"
+        for k, v in want.items()
+        if k not in got or got[k] != v
+    ]
+    assert not bad, f"{len(bad)} of {len(want)} cases differ:\n" + "\n".join(bad)
 
 
 def golden_spans(doc_id: str) -> list[tuple]:
-    docs = _goldens()
+    docs = _load_goldens(GOLDENS)["docs"]
     if doc_id not in docs:
         raise AssertionError(f"no golden span sequence for {doc_id} in {GOLDENS.name}")
     return [tuple(s) for s in docs[doc_id]]
@@ -134,9 +170,7 @@ def expected_spans(doc: dict) -> list[tuple]:
     """Golden span sequence [(seq, kind, text, media_ref)] for one generator
     document, per the shared canonical serialization: from the reference
     extractors when they import, else from the recorded goldens."""
-    try:
-        _import_reference()
-    except ModuleNotFoundError:
+    if not reference_available():
         return golden_spans(doc["doc_id"])
     pages = spans_to_pages(doc["spans"])
     result = run_reference(doc["bank_id"], pages)

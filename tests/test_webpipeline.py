@@ -159,7 +159,7 @@ def test_pii_counts_multiple(spark):
 def test_canonicalize_url(spark, raw, want):
     from aide_spark.operators.weblinks import canonicalize_url
 
-    assert _one(spark, canonicalize_url(F.lit(raw))) == want
+    assert _one(spark, canonicalize_url("u"), u=raw) == want
 
 
 @pytest.mark.parametrize(
@@ -177,7 +177,7 @@ def test_canonicalize_url(spark, raw, want):
 def test_registrable_domain(spark, host, want):
     from aide_spark.operators.weblinks import registrable_domain
 
-    assert _one(spark, registrable_domain(F.lit(host))) == want
+    assert _one(spark, registrable_domain("h"), h=host) == want
 
 
 @pytest.mark.parametrize(
@@ -198,7 +198,7 @@ def test_registrable_domain(spark, host, want):
 def test_resolve_href(spark, base, href, want):
     from aide_spark.operators.weblinks import resolve_href
 
-    assert _one(spark, resolve_href(F.lit(base), F.lit(href))) == want
+    assert _one(spark, resolve_href("b", "href"), b=base, href=href) == want
 
 
 def test_remove_dot_segments(spark):
@@ -212,7 +212,7 @@ def test_remove_dot_segments(spark):
         ("/", "/"),
         ("/a//b", "/a/b"),
     ]:
-        assert _one(spark, remove_dot_segments(F.lit(raw))) == want, raw
+        assert _one(spark, remove_dot_segments("p"), p=raw) == want, raw
 
 
 # ------------------------------------------------------------- normalization
@@ -241,12 +241,12 @@ def test_strip_controls_and_whitespace(spark):
     assert got == "abc d e f"
 
 
-def test_weblinks_sql_twins_match_columns(spark):
-    """r6: the SQL-text builders must produce exactly what the Column
-    builders produce, for absolute/relative/dot-segment/port/tracking/
-    no-scheme inputs (web_domain_outdegree runs the SQL twins)."""
-    from pyspark.sql import functions as F
-
+def test_weblinks_chain_values(spark):
+    """The staged resolve → canonicalize → host → domain chain that
+    web_domain_outdegree runs, over absolute/relative/dot-segment/port/
+    tracking/no-scheme inputs. Expected tuples were recorded when the SQL
+    text and an independent Column-tree form of each transform still both
+    existed and agreed on every case."""
     from aide_spark.operators import weblinks as W
 
     cases = [
@@ -261,24 +261,28 @@ def test_weblinks_sql_twins_match_columns(spark):
         ("http://h.test/a/b/", "."),
         ("http://h.test", "/only?gclid=1&keep=2"),
     ]
+    want = [  # (r, u, h, d)
+        ("http://www.shop1.co.uk/t/a", "http://www.shop1.co.uk/t/a", "www.shop1.co.uk", "shop1.co.uk"),
+        ("http://www.shop2.co.uk/up/x.html?q=1#f", "http://www.shop2.co.uk/up/x.html?q=1",
+         "www.shop2.co.uk", "shop2.co.uk"),
+        ("http://example.com:80/Path/other.html", "http://example.com/Path/other.html",
+         "example.com", "example.com"),
+        ("https://cdn.example.com/lib.js", "https://cdn.example.com/lib.js", "cdn.example.com",
+         "example.com"),
+        ("http://example.com:8080#frag-only", "http://example.com:8080/", "example.com", "example.com"),
+        ("https://a.github.io/x", "https://a.github.io/x", "a.github.io", "a.github.io"),
+        ("https://abs.example.org:8443/y?z=1", "https://abs.example.org:8443/y?z=1",
+         "abs.example.org", "example.org"),
+        ("http://h.test/a/b/", "http://h.test/a/b/", "h.test", "h.test"),
+        ("http://h.test/a/b/", "http://h.test/a/b/", "h.test", "h.test"),
+        ("http://h.test/only?gclid=1&keep=2", "http://h.test/only?keep=2", "h.test", "h.test"),
+    ]
     df = spark.createDataFrame(cases, "b string, href string")
-    col_chain = (
-        df.select(W.resolve_href(F.col("b"), F.col("href")).alias("r"))
-        .select(
-            F.col("r"),
-            W.canonicalize_url(F.col("r")).alias("u"),
-        )
-        .select(
-            "r",
-            "u",
-            W.url_host(F.col("u")).alias("h"),
-        )
-        .select("r", "u", "h", W.registrable_domain(F.col("h")).alias("d"))
+    got = (
+        df.select(W.resolve_href("b", "href").alias("r"))
+        .select("r", W.canonicalize_url("r").alias("u"))
+        .select("r", "u", W.url_host("u").alias("h"))
+        .select("r", "u", "h", W.registrable_domain("h").alias("d"))
+        .collect()
     )
-    sql_chain = (
-        df.select(F.expr(W.resolve_href_sql("b", "href")).alias("r"))
-        .select(F.col("r"), F.expr(W.canonicalize_url_sql("r")).alias("u"))
-        .select("r", "u", F.expr(W.url_host_sql("u")).alias("h"))
-        .select("r", "u", "h", F.expr(W.registrable_domain_sql("h")).alias("d"))
-    )
-    assert col_chain.collect() == sql_chain.collect()
+    assert [tuple(r) for r in got] == want
