@@ -21,12 +21,14 @@ Layout:
 
 Importing the package starts no Spark job and sets no conf. Sessions that
 run the pipeline add :data:`CODEGEN_CACHE` to their builder and may call
-:func:`warm` once after ``getOrCreate()``.
+:func:`warm` once after ``getOrCreate()``. :func:`release_checkpoint` frees
+the blocks of a ``localCheckpoint`` frame.
 """
 
 __version__ = "0.1.0"
 
 import logging
+import warnings
 
 _log = logging.getLogger(__name__)
 
@@ -92,3 +94,15 @@ def warm(spark) -> None:
             warm_one(spark)
         except Exception:
             _log.warning("aide_spark.warm: %s failed", warm_one.__name__, exc_info=True)
+
+
+def release_checkpoint(df) -> None:
+    """Free the blocks behind a ``localCheckpoint`` frame through its
+    LogicalRDD's backing rdd: ``DataFrame.unpersist()`` does not release
+    checkpoint blocks, and unpersisting a frame derived from one is a silent
+    no-op. A failed release leaves the blocks to the ContextCleaner, so it
+    warns rather than raises."""
+    try:
+        df._jdf.queryExecution().analyzed().rdd().unpersist(False)
+    except Exception as e:
+        warnings.warn(f"could not release a localCheckpoint frame: {e!r}", RuntimeWarning)

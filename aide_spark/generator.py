@@ -406,19 +406,3 @@ def spans_to_pages(spans: list | None) -> list[str]:
         else:
             pages[-1].append(text)
     return ["\n".join(p) for p in pages]
-
-
-def spans_have_media(spans: list | None, first_n_pages: int = 5) -> bool:
-    """Whether any media span occurs within the first N pages (validator's
-    image probe, pdf_validator.py:222-232 samples first 5 pages)."""
-    if spans is None:
-        return False
-    page = 1
-    for kind, text, _media, _off in spans:
-        if kind == "text" and text == PAGE_BREAK:
-            page += 1
-            if page > first_n_pages:
-                return False
-        elif kind == "media":
-            return True
-    return False

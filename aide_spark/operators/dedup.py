@@ -24,6 +24,7 @@ import warnings
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .. import release_checkpoint
 from ..functions import hashing as H
 from ..functions import vectors as V
 
@@ -263,17 +264,6 @@ def simhash_hamming_pairs(
     )
 
 
-def _free_ckpt(df) -> None:
-    """Release the block behind a ``localCheckpoint`` frame through its
-    LogicalRDD's backing rdd (unpersisting a derived frame would be a silent
-    no-op). A failed release leaves the block to the context cleaner, so it
-    warns rather than raises."""
-    try:
-        df._jdf.queryExecution().analyzed().rdd().unpersist(False)
-    except Exception as e:
-        warnings.warn(f"could not release a components checkpoint: {e!r}", RuntimeWarning)
-
-
 def connected_components(
     pairs: DataFrame,
     nodes: DataFrame,
@@ -364,7 +354,7 @@ def connected_components(
     # the plan to a LogicalRDD leaf every round (the GraphFrames recipe; on
     # a real cluster prefer reliable checkpoint(dir) — localCheckpoint dies
     # with an executor). The checkpointed block of the PREVIOUS round is
-    # released eagerly via _free_ckpt.
+    # released eagerly via release_checkpoint.
     prev_ckpt = None
     changed = 0
     for _ in range(max_iterations):
@@ -402,7 +392,7 @@ def connected_components(
         ck = new_labels.localCheckpoint(eager=False)
         changed = ck.where(F.col("label") != F.col("_old")).count()
         if prev_ckpt is not None:
-            _free_ckpt(prev_ckpt)
+            release_checkpoint(prev_ckpt)
         prev_ckpt = ck
         labels = ck.select("node", "label")
         if changed == 0:
@@ -416,7 +406,7 @@ def connected_components(
         )
         if strict:
             if prev_ckpt is not None:
-                _free_ckpt(prev_ckpt)
+                release_checkpoint(prev_ckpt)
             raise RuntimeError(msg)
         warnings.warn(msg, RuntimeWarning, stacklevel=2)
     # hand the caller a frame whose OWN plan is the cached one, so the
@@ -427,7 +417,7 @@ def connected_components(
     result.persist()
     result.count()
     if prev_ckpt is not None:
-        _free_ckpt(prev_ckpt)
+        release_checkpoint(prev_ckpt)
     return result
 
 

@@ -53,20 +53,6 @@ def pages_col(spans: Column) -> Column:
     return F.split(F.array_join(texts, "\n"), _BREAK_RE)
 
 
-def head_text_col(spans: Column, n_pages: int, sep_newline: bool = False) -> Column:
-    """Concatenated text of the first ``n_pages`` pages.
-
-    ``sep_newline=False`` mirrors the validator's content probe
-    (pdf_validator.py:214-219: ``total_text += text``);
-    ``sep_newline=True`` mirrors APGVB metadata assembly
-    (apgvb_extractor.py:491-494: ``combined += text + '\\n'``).
-    """
-    pages = F.slice(pages_col(spans), 1, n_pages)
-    if sep_newline:
-        return F.array_join(F.transform(pages, lambda p: F.concat(p, F.lit("\n"))), "")
-    return F.array_join(pages, "")
-
-
 def _nth_break_cut(spans: Column, n: int) -> Column:
     """Offset of the ``n``-th PAGE_BREAK span (NULL when there are fewer) —
     a span sits on page <= n iff its offset is below this cut (``offset`` is

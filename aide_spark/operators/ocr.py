@@ -220,21 +220,6 @@ def render_page(
     return w, h, _np.packbits(mat, axis=1).tobytes()
 
 
-def _cell_sig(
-    bits: list[int], w: int, x0: int, y0: int
-) -> int:
-    """35-bit signature of the 5×7 cell at (x0, y0); ``bits`` is one int of
-    row bits per scanline (bit (w-1-x) = pixel x)."""
-    v = 0
-    for r in range(GLYPH_H):
-        row = bits[y0 + r] if 0 <= y0 + r < len(bits) else 0
-        for c in range(GLYPH_W):
-            x = x0 + c
-            px = (row >> (w - 1 - x)) & 1 if 0 <= x < w else 0
-            v = (v << 1) | px
-    return v
-
-
 def _rows_to_bytes(bits: list[int], w: int) -> bytes:
     """Row ints back to the packed-bitmap layout (MSB-first, byte-padded)."""
     stride = (w + 7) // 8

@@ -124,28 +124,6 @@ def top_ngram_char_ppm(docs: DataFrame, n: int) -> DataFrame:
     )
 
 
-def dup_ngram_char_ppm(docs: DataFrame, n: int) -> DataFrame:
-    """Per doc: chars covered by ALL duplicated word n-grams, in ppm.
-
-    Gopher's duplicate-n-gram signal: every occurrence of a gram whose
-    count exceeds 1 contributes ``length(gram)`` chars (occurrences are
-    counted with overlap — documented determinism over fidelity to any
-    one de-overlapping scheme). Returns (doc_id, dup{n}gram_ppm).
-    """
-    c = _gram_counts(docs, n)
-    dup_chars = F.sum(
-        F.when(F.col("cnt") > 1, F.col("cnt") * F.length("gram")).otherwise(F.lit(0))
-    )
-    return (
-        c.groupBy("doc_id", "n_chars")
-        .agg(dup_chars.alias("dup_chars"))
-        .select(
-            "doc_id",
-            _ppm(F.col("dup_chars"), F.col("n_chars")).alias(f"dup{n}gram_ppm"),
-        )
-    )
-
-
 def dup_word_ppm(docs: DataFrame) -> DataFrame:
     """Per doc: fraction of words that are repeats of an earlier word
     (occurrences beyond each word's first), in ppm — the word-level

@@ -19,8 +19,8 @@ parquet — the documented fallback (SURVEY.md §7):
 
 Per-partition lineage + metrics: the lineage table has one row per document
 per batch that saw it (doc_id, batch_id, status ∈ committed/quarantined/
-skipped, error_code) — 'skipped' rows audit resume decisions and are what
-the commit stats are derived from; the metrics table has one
+skipped, error_code) — 'skipped' rows audit resume decisions, and the commit
+stats count them as the lineage is written; the metrics table has one
 row per Spark partition per batch (partition_id, docs, spans) — the
 north-rule observability surface.
 """
@@ -32,7 +32,7 @@ import os
 import time
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from . import pipeline
@@ -139,8 +139,15 @@ def run_with_resume(
     else:
         pending = docs
 
-    out = pipeline.run(pending, persist=True)
-    store.stage(out["spans_out"], "spans", batch_id)
+    # commit stats are observed on the staged writes themselves: no
+    # read-back job, and no action re-executing the input/pipeline plans.
+    # Unnamed Observations get unique names, so concurrent batches of one
+    # session cannot collide.
+    span_stats, lineage_stats = Observation(), Observation()
+    out = pipeline.run(pending)
+    store.stage(
+        out["spans_out"].observe(span_stats, F.count(F.lit(1)).alias("n")), "spans", batch_id
+    )
     store.stage(out["quarantine"], "quarantine", batch_id)
 
     # lineage: one row per input doc — extracted, quarantined, or skipped
@@ -154,7 +161,12 @@ def run_with_resume(
     )
     if skipped is not None:
         lineage = lineage.unionByName(skipped)
-    lineage_path = store.stage(lineage, "lineage", batch_id)
+    lineage = lineage.observe(
+        lineage_stats,
+        F.count_if(F.col("status") != "skipped").alias("docs"),
+        F.count_if(F.col("status") == "skipped").alias("skipped"),
+    )
+    store.stage(lineage, "lineage", batch_id)
 
     # per-partition metrics computed on the PRODUCING plan (same persisted
     # boundary the write consumed), so partition_id reflects the partitions
@@ -169,23 +181,10 @@ def run_with_resume(
         )
         .withColumn("batch_id", F.lit(batch_id))
     )
-    metrics_path = store.stage(metrics, "metrics", batch_id)
-
-    # commit stats derive from the STAGED parquet only — two tiny read-back
-    # aggregates, never a re-execution of the input/pipeline plans (the r3
-    # pending.count() re-ran the anti-join; at 100× each driver-side action
-    # was a full extra pass over the input)
-    lin = spark.read.parquet(lineage_path).agg(
-        F.coalesce(F.count(F.when(F.col("status") != "skipped", 1)), F.lit(0)).alias("n_docs"),
-        F.coalesce(F.count(F.when(F.col("status") == "skipped", 1)), F.lit(0)).alias("n_done"),
-    ).collect()[0]
-    n_spans = (
-        spark.read.parquet(metrics_path)
-        .agg(F.coalesce(F.sum("spans"), F.lit(0)).alias("n"))
-        .collect()[0]["n"]
-    )
-    n_docs, n_done, n_spans = int(lin["n_docs"]), int(lin["n_done"]), int(n_spans)
-    # every staged table is on disk and the stats are collected: release the
+    store.stage(metrics, "metrics", batch_id)
+    lin = lineage_stats.get
+    n_docs, n_done, n_spans = lin["docs"], lin["skipped"], span_stats.get["n"]
+    # every staged table is on disk and the stats are observed: release the
     # fan-out materialization so a long-lived driver looping over batches
     # does not accumulate one transactions+metadata store per batch (r4
     # VERDICT #4; r6 — the frames are localCheckpoint-backed, which a bare

@@ -22,9 +22,12 @@ Scale notes (100 TB, 1000 executors):
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .. import release_checkpoint
 from ..operators import apgvb_parser, canara_parser, union_parser, validation
 from ..operators.lines import head_lines_frame, line_table
 from ..serialize import meta_texts_col, summary_text_col, txn_text_col
@@ -33,6 +36,10 @@ SUMMARY_COLS = [
     "doc_id", "opening_balance", "closing_balance", "total_debits",
     "total_credits", "net_change", "transaction_count", "from_date", "to_date",
 ]
+
+# bank_id → parser module; every loop over the banks goes in this order,
+# which is the order of the transactions/metadata/summaries unions
+PARSERS = {"UNION": union_parser, "CANARA": canara_parser, "APGVB": apgvb_parser}
 
 
 def split_valid(docs: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:
@@ -49,84 +56,62 @@ def split_valid(docs: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:
     return val, valid, quarantine
 
 
-def parse_all(valid_docs: DataFrame, persist: bool = False) -> dict[str, DataFrame]:
-    """Dispatch valid docs to the three bank parsers; union the results.
+def parse_all(valid_docs: DataFrame) -> dict[str, DataFrame]:
+    """Dispatch valid docs to the bank parsers of :data:`PARSERS`; union the
+    results in that order.
 
-    Returns {'transactions', 'metadata', 'summaries'} DataFrames. With
-    ``persist=True`` the transactions + metadata unions are cached BEFORE the
-    summaries are derived from them, so the parser subtrees execute once even
-    though three downstream outputs consume them.
+    Returns {'transactions', 'metadata', 'summaries'} DataFrames. The
+    transactions and metadata unions are lazy ``localCheckpoint``s taken
+    BEFORE the summaries are derived from them, so the parser subtrees
+    execute once even though three downstream outputs consume them; free
+    their blocks with :func:`release`.
     """
     lines = line_table(valid_docs, carry=("bank_id",))
-    u_lines = lines.where(F.col("bank_id") == "UNION").drop("bank_id")
-    c_lines = lines.where(F.col("bank_id") == "CANARA").drop("bank_id")
-    a_lines = lines.where(F.col("bank_id") == "APGVB").drop("bank_id")
+    txns, meta = [], []
+    for bank, parser in PARSERS.items():
+        bank_lines = lines.where(F.col("bank_id") == bank).drop("bank_id")
+        txns.append(parser.transactions(bank_lines).withColumn("bank_id", F.lit(bank)))
+        # metadata inputs: the first-page line ARRAY (APGVB: two pages),
+        # built in place by lines.head_lines_frame (r6) — zero-shuffle,
+        # staged behind Generate barriers so nothing is re-evaluated per
+        # probe or per element. Docs whose head pages have no text lines
+        # still get a metadata row (reference: metadata extracted from ''
+        # text ⇒ constants only).
+        bank_docs = valid_docs.where(F.col("bank_id") == bank)
+        meta.append(parser.metadata(head_lines_frame(bank_docs, two_pages=bank == "APGVB")))
 
-    u_docs = valid_docs.where(F.col("bank_id") == "UNION")
-    c_docs = valid_docs.where(F.col("bank_id") == "CANARA")
-    a_docs = valid_docs.where(F.col("bank_id") == "APGVB")
+    # r6: lazy localCheckpoint instead of .persist(). Both make the parser
+    # subtrees execute once for the multi-output fan-out, but the checkpoint
+    # stores raw partitions (no columnar cache encode) AND truncates the
+    # logical plan to a leaf, so every downstream consumer (spans_out
+    # assembly, summaries, results envelope) plans and runs against a small
+    # plan — measured 3.8-4.0 s → 2.3-2.5 s for the spans_out pass at 20k
+    # docs. Lazy: partitions materialize on first use and lineage is kept
+    # for the rest, so partial consumption stays correct; blocks are freed
+    # by release(), or by the ContextCleaner once the frames are collected.
+    #
+    # The three-branch union concatenates each branch's shuffle-width
+    # partitions, so the checkpointed frames (and every downstream stage
+    # over them) carried 3x the session's parallelism in tasks — pure
+    # per-task scheduling/deserialization overhead at any scale. coalesce
+    # back to the session shuffle width (the cluster-sized bound; a narrow
+    # dependency, no extra shuffle: each task computes its three branch
+    # partitions back to back).
+    width = int(valid_docs.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    transactions = reduce(DataFrame.unionByName, txns).coalesce(width).localCheckpoint(eager=False)
+    metadata = reduce(DataFrame.unionByName, meta).coalesce(width).localCheckpoint(eager=False)
 
-    transactions = (
-        union_parser.transactions(u_lines).withColumn("bank_id", F.lit("UNION"))
-        .unionByName(
-            canara_parser.transactions(c_lines).withColumn("bank_id", F.lit("CANARA"))
-        )
-        .unionByName(
-            apgvb_parser.transactions(a_lines).withColumn("bank_id", F.lit("APGVB"))
-        )
-    )
-    # metadata inputs: the first-page line ARRAY, built in place by
-    # lines.head_lines_frame (r6) — zero-shuffle, staged behind Generate
-    # barriers so nothing is re-evaluated per probe or per element. Docs
-    # whose head pages have no text lines still get a metadata row
-    # (reference: metadata extracted from '' text ⇒ constants only).
-    metadata = (
-        union_parser.metadata(head_lines_frame(u_docs))
-        .unionByName(canara_parser.metadata(head_lines_frame(c_docs)))
-        .unionByName(apgvb_parser.metadata(head_lines_frame(a_docs, two_pages=True)))
-    )
-    if persist:
-        # r6: lazy localCheckpoint instead of .persist(). Both make the
-        # parser subtrees execute once for the multi-output fan-out, but
-        # the checkpoint stores raw partitions (no columnar cache encode)
-        # AND truncates the logical plan to a leaf, so every downstream
-        # consumer (spans_out assembly, summaries, results envelope) plans
-        # and runs against a small plan — measured 3.8-4.0 s → 2.3-2.5 s
-        # for the spans_out pass at 20k docs. Lazy: partitions materialize
-        # on first use and lineage is kept for the rest, so partial
-        # consumption stays correct; blocks are released by the
-        # ContextCleaner when the frames are garbage collected.
-        #
-        # The three-branch union concatenates each branch's shuffle-width
-        # partitions, so the checkpointed frames (and every downstream
-        # stage over them) carried 3x the session's parallelism in tasks —
-        # pure per-task scheduling/deserialization overhead at any scale.
-        # coalesce back to the session shuffle width (the cluster-sized
-        # bound; a narrow dependency, no extra shuffle: each task computes
-        # its three branch partitions back to back).
-        spark = transactions.sparkSession
-        width = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        transactions = transactions.coalesce(width).localCheckpoint(eager=False)
-        metadata = metadata.coalesce(width).localCheckpoint(eager=False)
-
-    summaries = (
-        union_parser.summary(transactions.where(F.col("bank_id") == "UNION"))
-        .select(*SUMMARY_COLS)
-        .unionByName(
-            canara_parser.summary(
-                transactions.where(F.col("bank_id") == "CANARA")
-            ).select(*SUMMARY_COLS)
-        )
-        .unionByName(
-            apgvb_parser.summary(
-                transactions.where(F.col("bank_id") == "APGVB"),
-                metadata.where(
-                    F.col("metadata.bank_name") == apgvb_parser.BANK_NAME
-                ),
-            ).select(*SUMMARY_COLS)
-        )
-    )
-    return {"transactions": transactions, "metadata": metadata, "summaries": summaries}
+    summaries = []
+    for bank, parser in PARSERS.items():
+        args = [transactions.where(F.col("bank_id") == bank)]
+        if bank == "APGVB":  # its opening balance comes from the metadata
+            args.append(metadata.where(F.col("metadata.bank_name") == parser.BANK_NAME))
+        summaries.append(parser.summary(*args).select(*SUMMARY_COLS))
+    return {
+        "transactions": transactions,
+        "metadata": metadata,
+        "summaries": reduce(DataFrame.unionByName, summaries),
+    }
 
 
 def media_spans(docs: DataFrame) -> DataFrame:
@@ -247,40 +232,30 @@ def results_envelope(parsed: dict[str, DataFrame]) -> DataFrame:
 
 
 def release(out: dict[str, DataFrame]) -> None:
-    """Free the materialization blocks of a ``run(persist=True)`` result.
-
-    The parsed transactions/metadata frames are backed by a lazy
-    ``localCheckpoint`` (see :func:`parse_all`); ``DataFrame.unpersist()``
-    does not release checkpoint blocks, so long-lived drivers looping over
-    batches call this once every staged output is on disk (the r4
-    cache-ownership rule). Safe on non-persisted results (no-op). Frames
-    never released are still freed by the ContextCleaner when garbage
-    collected — this makes the release deterministic, not merely eventual.
+    """Free the checkpoint blocks behind a :func:`run` result's parsed
+    transactions and metadata (see :func:`parse_all`). Long-lived drivers
+    looping over batches call this once every staged output is on disk (the
+    r4 cache-ownership rule). Frames never released are still freed by the
+    ContextCleaner when garbage collected — this makes the release
+    deterministic, not merely eventual.
     """
     for key in ("transactions", "metadata"):
-        df = out.get(key)
-        if df is None:
-            continue
-        df.unpersist()
-        try:
-            df._jdf.queryExecution().analyzed().rdd().unpersist(False)
-        except Exception:  # non-checkpointed frame (persist=False path)
-            pass
+        release_checkpoint(out[key])
 
 
-def run(docs: DataFrame, persist: bool = False) -> dict[str, DataFrame]:
+def run(docs: DataFrame) -> dict[str, DataFrame]:
     """Full pipeline: returns every output table of the engine.
 
-    ``persist=True`` materializes the parsed transactions + metadata (the
-    REDUCED data — spans stripped down to parsed rows) before the multi-
-    output fan-out: spans_out, summaries and the results envelope all reuse
-    them, otherwise each output re-executes the parser subtrees (Spark does
-    not share common subplans across actions). This is the standard
-    write-or-cache point of a production multi-output job; at 100 TB the
-    equivalent is writing the transactions table and deriving the rest from
-    it."""
+    The parsed transactions + metadata (the REDUCED data — spans stripped
+    down to parsed rows) are checkpointed before the multi-output fan-out:
+    spans_out, summaries and the results envelope all reuse them, otherwise
+    each output would re-execute the parser subtrees (Spark does not share
+    common subplans across actions). This is the standard write-or-cache
+    point of a production multi-output job; at 100 TB the equivalent is
+    writing the transactions table and deriving the rest from it. Call
+    :func:`release` when done with the result."""
     val, valid, quarantine = split_valid(docs)
-    parsed = parse_all(valid, persist=persist)
+    parsed = parse_all(valid)
     return {
         "validation": val,
         "quarantine": quarantine,

@@ -2028,24 +2028,6 @@ def ann_ivf_fixed_topk(spark, sf_dir):
     return ivf_search(assigned.where("vec_id != 0"), cents, list(query), nprobe=4, topk=10)
 
 
-def ann_ivf_topk(spark, sf_dir):  # tests-only: NOT registered in QUERIES
-    """IVF ANN with MLlib KMeans training (iterative — not SQL-expressible,
-    so deliberately NOT a driver ``queries()`` entry: the cross-checkable
-    probe/search shape is the board's ``ann_ivf_fixed_topk`` row, and this
-    KMeans path is exactness-pinned vs brute force by
-    tests/test_similarity.py instead). Coarse-quantize with KMeans, probe
-    the 4 nearest of 8 clusters, brute-force within — the partition-pruned
-    search shape for 10^9+ vectors."""
-    from .operators.similarity import ivf_index, ivf_search
-
-    emb = _t(spark, sf_dir, "embeddings")
-    query = emb.where("vec_id = 0").collect()[0].embedding
-    assigned, centroids = ivf_index(emb, k=8, seed=42)
-    return ivf_search(
-        assigned.where("vec_id != 0"), centroids, list(query), nprobe=4, topk=10
-    )
-
-
 # ===========================================================================
 # HTML main-content extraction (north-rule leg: boilerplate strip + DOM
 # heuristics). Synthetic pages are built deterministically from the

@@ -134,7 +134,7 @@ def main() -> None:
     # the steady-state number is the one that extrapolates. The cache is
     # cleared so the timed run performs ALL the compute (scan → validate →
     # parse → emit), only the compiled code stays warm.
-    warm = pipeline.run(docs, persist=True)
+    warm = pipeline.run(docs)
     warm["spans_out"].count()
     spark.catalog.clearCache()
     # Catalyst planning (analysis → optimization → physical plan) is
@@ -153,7 +153,7 @@ def main() -> None:
     plan_sec = None  # first-iteration value = the cold Catalyst planning cost
     n_spans = 0
     for _ in range(max(runs, 1)):
-        out = pipeline.run(docs, persist=True)
+        out = pipeline.run(docs)
         cnt = out["spans_out"].groupBy().count()
         qe = cnt._jdf.queryExecution()
         t_plan = time.perf_counter()

@@ -31,6 +31,7 @@ def build_raw_docs(spark, input_path: str, passwords_path: str | None = None):
     a broadcast dim and the codec attempts real RC4 decryption per doc."""
     from pyspark.sql import functions as F
 
+    from aide_spark.plans.pipeline import PARSERS
     from aide_spark.sources.binary_ingest import ingest_binary_pdf
 
     raw = (
@@ -60,9 +61,7 @@ def build_raw_docs(spark, input_path: str, passwords_path: str | None = None):
         .withColumn("bank_id", F.regexp_extract("doc_id", r"^([A-Z]+)-", 1))
         .withColumn(
             "bank_id",
-            F.when(
-                F.col("bank_id").isin("UNION", "CANARA", "APGVB"), F.col("bank_id")
-            ),
+            F.when(F.col("bank_id").isin(*PARSERS), F.col("bank_id")),
         )
     )
 

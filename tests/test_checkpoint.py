@@ -3,7 +3,10 @@ per-partition lineage + metrics)."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
+from pyspark.sql import functions as F
 
 from aide_spark.generator import local_corpus_df
 from aide_spark.plans import pipeline
@@ -145,15 +148,13 @@ def test_list_statements_orders_by_commit_time(spark, tmp_path):
 
 
 def test_resume_run_triggers_no_extra_jobs(spark, store):
-    """r3 VERDICT nit #1 — run_with_resume's only driver-side actions beyond
-    the 4 stage writes must be the two TINY staged-parquet read-back
-    aggregates: no pending.count(), no semi-join skipped count, no full
-    spans-table read-back count (each of those re-executed the input plan).
-    Verified by job-group audit: every job whose stage call-site is
-    checkpoint.py must be a `collect` of the read-back aggregates — exactly
-    two — and no `count at ...checkpoint.py` job may exist. (Raw job totals
-    are NOT asserted: parquet reader/writer and broadcast-exchange sub-jobs
-    are Spark internals that vary by plan.)"""
+    """r3 VERDICT nit #1 — run_with_resume issues no Spark action of its
+    own: no pending.count(), no semi-join skipped count, no read-back
+    aggregate over the staged parquet. Its commit stats are observed on the
+    staged writes, whose jobs carry the writer's JVM call site. Verified by
+    job-group audit: no job of the run may have a stage whose call site is
+    checkpoint.py. (Raw job totals are NOT asserted: parquet reader/writer
+    and broadcast-exchange sub-jobs are Spark internals that vary by plan.)"""
     docs = local_corpus_df(spark, 12)
     run_with_resume(spark, docs.where("doc_id RLIKE '[02468]$'"), store, batch_id="b1")
 
@@ -165,21 +166,53 @@ def test_resume_run_triggers_no_extra_jobs(spark, store):
         sc.setLocalProperty("spark.jobGroup.id", None)
 
     assert r["skipped_committed"] > 0  # the resume path actually exercised
+    jobs = sc.statusTracker().getJobIdsForGroup("resume-audit")
+    assert jobs, "audit saw no jobs at all"
     jsc = sc._jsc.sc().statusTracker()
-    actions = []
-    for j in sc.statusTracker().getJobIdsForGroup("resume-audit"):
+    actions = set()
+    for j in jobs:
         opt = jsc.getJobInfo(j)
         if not opt.isDefined():
             continue
         for sid in list(opt.get().stageIds()):
             so = jsc.getStageInfo(sid)
             if so.isDefined() and "checkpoint.py" in so.get().name():
-                actions.append(so.get().name().split("\n")[0])
-                break  # one call-site per job
-    assert actions, "audit saw no checkpoint.py jobs at all"
-    assert all(a.startswith("collect at") for a in actions), actions
-    # AQE may split one action into several jobs — count distinct CALL-SITES
-    assert len(set(actions)) == 2, sorted(set(actions))
+                actions.add(so.get().name().split("\n")[0])
+    assert not actions, sorted(actions)
+
+
+def _store_counts(spark, store, batch_id):
+    """Commit stats of ``batch_id`` counted from what the store holds."""
+    lineage = store.read(spark, "lineage").where(F.col("batch_id") == batch_id)
+    spans = spark.read.parquet(os.path.join(store.base, "spans", f"batch={batch_id}"))
+    return {
+        "docs_processed": lineage.where("status != 'skipped'").count(),
+        "skipped_committed": lineage.where("status = 'skipped'").count(),
+        "spans": spans.count(),
+    }
+
+
+def test_commit_stats_match_store(spark, store):
+    """The returned and committed stats (observed on the staged writes)
+    equal independent counts over the committed tables: a fresh run, a
+    resume, and a no-op rerun whose observed inputs are empty."""
+    docs = local_corpus_df(spark, 24)
+    half = docs.where("doc_id RLIKE '[02468]$'")
+    n_half = half.count()
+    runs = {"fresh": ("b1", half), "resume": ("b2", docs), "noop": ("b3", docs)}
+    got = {}
+    for name, (batch_id, batch) in runs.items():
+        r = run_with_resume(spark, batch, store, batch_id=batch_id)
+        want = _store_counts(spark, store, batch_id)
+        assert {k: r[k] for k in want} == want, name
+        (commit,) = [c for c in store.committed() if c["batch_id"] == batch_id]
+        assert (commit["docs"], commit["spans"]) == (want["docs_processed"], want["spans"])
+        got[name] = want
+    assert got["fresh"]["docs_processed"] == n_half and got["fresh"]["spans"] > 0
+    assert got["fresh"]["skipped_committed"] == 0
+    assert got["resume"]["skipped_committed"] == n_half
+    assert got["resume"]["docs_processed"] == 24 - n_half and got["resume"]["spans"] > 0
+    assert got["noop"] == {"docs_processed": 0, "skipped_committed": 24, "spans": 0}
 
 
 def test_redrive_no_quarantine_returns_empty_frame(spark, store):

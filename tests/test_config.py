@@ -38,3 +38,12 @@ def test_compatibility_check(spark):
         elif doc_id.startswith(("BAD-CORRUPTED", "BAD-SCANNED", "BAD-EMPTY",
                                 "BAD-MANYPAGES")):
             assert not ok  # no bank_id ⇒ incompatible (reference returns False)
+
+
+def test_pipeline_parsers_are_the_active_banks():
+    """The pipeline dispatches exactly the banks the config dimension
+    lists as ACTIVE."""
+    from aide_spark.operators.config import BANK_CONFIGS
+    from aide_spark.plans.pipeline import PARSERS
+
+    assert set(PARSERS) == {bank for bank, _, status, *_ in BANK_CONFIGS if status == "ACTIVE"}

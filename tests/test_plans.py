@@ -420,14 +420,14 @@ def test_bucketed_join_is_shuffle_free(spark, tmp_path):
 
 
 def test_pipeline_release_frees_checkpoint_blocks(spark):
-    """r6: run(persist=True) materializes the parser outputs via lazy
+    """r6: run() materializes the parser outputs via lazy
     localCheckpoint; pipeline.release must return the persistent-RDD
     registry to its baseline (DataFrame.unpersist alone cannot free
     checkpoint blocks), so a long-lived driver looping over batches does
     not accumulate one store per batch."""
     baseline = spark.sparkContext._jsc.getPersistentRDDs().size()
     docs = local_corpus_df(spark, 24)
-    out = pipeline.run(docs, persist=True)
+    out = pipeline.run(docs)
     out["spans_out"].count()
     assert spark.sparkContext._jsc.getPersistentRDDs().size() > baseline
     pipeline.release(out)

@@ -15,7 +15,7 @@ from aide_spark.plans import pipeline
 @pytest.fixture(scope="module")
 def out(spark):
     docs = local_corpus_df(spark, 120)
-    o = pipeline.run(docs, persist=True)
+    o = pipeline.run(docs)
     return {
         "txns": [r.asDict() for r in o["transactions"].collect()],
         "summaries": {r.doc_id: r.asDict() for r in o["summaries"].collect()},

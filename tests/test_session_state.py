@@ -110,9 +110,9 @@ def test_connected_components_sets_no_session_conf(spark, monkeypatch):
     assert got == {**dict.fromkeys("abcd", "a"), "x": "x", "y": "x", "z": "z"}
 
 
-def test_free_ckpt_warns_when_release_fails(spark):
+def test_release_checkpoint_warns_when_release_fails(spark):
     """A frame that is not a checkpoint has no backing rdd to release."""
-    from aide_spark.operators.dedup import _free_ckpt
+    from aide_spark import release_checkpoint
 
     with pytest.warns(RuntimeWarning, match="could not release"):
-        _free_ckpt(spark.range(1))
+        release_checkpoint(spark.range(1))
