@@ -185,10 +185,10 @@ def run_with_resume(
     lin = lineage_stats.get
     n_docs, n_done, n_spans = lin["docs"], lin["skipped"], span_stats.get["n"]
     # every staged table is on disk and the stats are observed: release the
-    # fan-out materialization so a long-lived driver looping over batches
-    # does not accumulate one transactions+metadata store per batch (r4
-    # VERDICT #4; r6 — the frames are localCheckpoint-backed, which a bare
-    # unpersist() would not free)
+    # fan-out materializations so a long-lived driver looping over batches
+    # does not accumulate one validated-input + transactions + metadata
+    # store per batch (r4 VERDICT #4; r6 — the frames are
+    # localCheckpoint-backed, which a bare unpersist() would not free)
     pipeline.release(out)
     store.commit(batch_id, {"docs": n_docs, "spans": n_spans})
     return {

@@ -46,10 +46,20 @@ def split_valid(docs: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:
     """→ (validation, valid_docs, quarantine). Quarantine is the DLQ analogue
     (SURVEY.md §2.11): invalid docs carry their error_code, never poison the
     parse stage. The split is a narrow FILTER on a computed validation struct
-    — never a join back to the (wide, spans-carrying) docs table."""
-    tagged = validation.with_validation(docs)
+    — never a join back to the (wide, spans-carrying) docs table.
+
+    Each of the three frames re-runs ``docs``' plan and the validation
+    projections when executed; :func:`run` splits one checkpointed
+    validated frame instead."""
+    return _split(validation.with_validation(docs), docs.columns)
+
+
+def _split(tagged: DataFrame, doc_cols: list[str]) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """The (validation, valid_docs, quarantine) filters over ``tagged`` —
+    docs + :data:`validation.VALIDATION_COLS`, as ``with_validation`` builds
+    it; ``doc_cols`` are the input columns the valid side keeps."""
     val = tagged.select("doc_id", *validation.VALIDATION_COLS)
-    valid = tagged.where(F.col("is_valid")).select(*docs.columns)
+    valid = tagged.where(F.col("is_valid")).select(*doc_cols)
     quarantine = tagged.where(~F.col("is_valid")).select(
         "doc_id", "bank_id", "error_code", "pdf_type"
     )
@@ -136,13 +146,13 @@ def spans_out(docs: DataFrame, parsed: dict[str, DataFrame]) -> DataFrame:
     """Assemble the ordered output span sequence per doc:
     meta spans → media pass-through → txn spans → summary span.
 
-    ``docs`` may be the RAW documents table (r6): the media refs join in via
-    a left join keyed on the metadata side, which carries only validated
-    docs — rows of invalid docs on the media side never match, so skipping
-    the validation filter here yields identical output while removing a full
-    re-execution of the validation expression tree (the is_valid filter
-    forced the page-split + media-fold columns to be computed again on this
-    branch; measured as its own ~7 s-tasksum scan stage per timed run)."""
+    ``docs`` is any frame with ``doc_id`` and ``spans`` covering the parsed
+    docs: :func:`run` passes its checkpointed validated frame, and the RAW
+    documents table works too (r6). The media refs join in via a left join
+    keyed on the metadata side, which carries only validated docs — rows of
+    invalid docs on the media side never match, so no validation filter is
+    needed here (on raw docs it forced the page-split + media-fold columns
+    to be computed again on this branch)."""
     meta_arr = parsed["metadata"].select(
         "doc_id", meta_texts_col(F.col("metadata")).alias("meta_texts")
     )
@@ -232,19 +242,28 @@ def results_envelope(parsed: dict[str, DataFrame]) -> DataFrame:
 
 
 def release(out: dict[str, DataFrame]) -> None:
-    """Free the checkpoint blocks behind a :func:`run` result's parsed
-    transactions and metadata (see :func:`parse_all`). Long-lived drivers
-    looping over batches call this once every staged output is on disk (the
-    r4 cache-ownership rule). Frames never released are still freed by the
-    ContextCleaner when garbage collected — this makes the release
-    deterministic, not merely eventual.
+    """Free the checkpoint blocks behind a :func:`run` result: the validated
+    input and the parsed transactions and metadata (see :func:`parse_all`).
+    Long-lived drivers looping over batches call this once every staged
+    output is on disk (the r4 cache-ownership rule). Frames never released
+    are still freed by the ContextCleaner when garbage collected — this
+    makes the release deterministic, not merely eventual.
     """
-    for key in ("transactions", "metadata"):
+    for key in ("validated", "transactions", "metadata"):
         release_checkpoint(out[key])
 
 
 def run(docs: DataFrame) -> dict[str, DataFrame]:
     """Full pipeline: returns every output table of the engine.
+
+    The validated input (``docs`` + the validation columns) is a lazy
+    ``localCheckpoint``: the validation rows, the quarantine, the parser
+    inputs and the media side of ``spans_out`` all read it, so the input
+    plan — scan, decode, validation projections — runs once per doc per job
+    instead of once per consumer. Under AQE
+    ``parse_all``'s checkpoints run the line-table shuffle when they are
+    created, which fills this one; later readers read its blocks. No
+    coalesce: the frame keeps the input's partitions.
 
     The parsed transactions + metadata (the REDUCED data — spans stripped
     down to parsed rows) are checkpointed before the multi-output fan-out:
@@ -254,15 +273,14 @@ def run(docs: DataFrame) -> dict[str, DataFrame]:
     point of a production multi-output job; at 100 TB the equivalent is
     writing the transactions table and deriving the rest from it. Call
     :func:`release` when done with the result."""
-    val, valid, quarantine = split_valid(docs)
+    validated = validation.with_validation(docs).localCheckpoint(eager=False)
+    val, valid, quarantine = _split(validated, docs.columns)
     parsed = parse_all(valid)
     return {
+        "validated": validated,
         "validation": val,
         "quarantine": quarantine,
         **parsed,
-        # raw docs: the media side of the assembly join does not need the
-        # validation filter (left join on the validated metadata side drops
-        # invalid docs' rows) — see spans_out docstring
-        "spans_out": spans_out(docs, parsed),
+        "spans_out": spans_out(validated, parsed),
         "results": results_envelope(parsed),
     }

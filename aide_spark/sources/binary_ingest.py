@@ -50,22 +50,31 @@ def encode_spans(spans: list[tuple]) -> bytes:
     return "\n".join(lines).encode("utf-8")
 
 
+def _is_gzip(payload) -> bool:
+    return isinstance(payload, (bytes, bytearray)) and bytes(payload[:2]) == b"\x1f\x8b"
+
+
+def _gunzip(payload: bytes) -> bytes | None:
+    """gzip payload → its decompressed bytes; None if the body is corrupt."""
+    import gzip
+    import zlib
+
+    try:
+        return gzip.decompress(bytes(payload))
+    # zlib.error is NOT an OSError subclass: a corrupt deflate body behind
+    # a valid 1f 8b magic raises it, and the quarantine contract is that
+    # the decoders never raise (one bad WARC payload must not fail the
+    # whole mapInPandas job)
+    except (OSError, EOFError, zlib.error):
+        return None
+
+
 def decode_container(payload: bytes) -> list[dict] | None:
     """bytes → span dicts; None for undecodable payloads (quarantine path).
     gzip-transparent: a ``1f 8b`` magic is decompressed first — web-crawl
     text payloads overwhelmingly arrive gzipped (WARC convention)."""
-    if isinstance(payload, (bytes, bytearray)) and bytes(payload[:2]) == b"\x1f\x8b":
-        import gzip
-        import zlib
-
-        try:
-            payload = gzip.decompress(bytes(payload))
-        # zlib.error is NOT an OSError subclass: a corrupt deflate body behind
-        # a valid 1f 8b magic raises it, and the quarantine contract is that
-        # decode_container never raises (one bad WARC payload must not fail
-        # the whole mapInPandas job)
-        except (OSError, EOFError, zlib.error):
-            return None
+    if _is_gzip(payload):
+        payload = _gunzip(payload)
     try:
         text = payload.decode("utf-8")
     except (UnicodeDecodeError, AttributeError):
@@ -207,10 +216,11 @@ def decode_html(payload: bytes) -> list[dict] | None:
 
 def sniff_format(payload: bytes) -> str:
     """Magic-bytes dispatch for the mixed web-crawl table:
-    ``pdf`` | ``html`` | ``container`` (utf-8 text / span framing, incl.
-    gzip — decode_container is gzip-transparent).  The HTML sniff checks
-    the first 256 bytes case-insensitively for a doctype or root tag (the
-    WHATWG sniffing rule, trimmed)."""
+    ``pdf`` | ``html`` | ``container`` (utf-8 text / span framing; a gzip
+    payload is ``container`` here — :func:`sniff_decode` decompresses and
+    re-sniffs it).  The HTML sniff checks the first 256 bytes
+    case-insensitively for a doctype or root tag (the WHATWG sniffing rule,
+    trimmed)."""
     if not isinstance(payload, (bytes, bytearray)):
         return "container"
     head = bytes(payload[:256])
@@ -233,6 +243,20 @@ _MIXED_DECODERS: dict[str, Callable[[bytes], list | None]] = {
     "html": decode_html,
     "container": decode_container,
 }
+
+
+def sniff_decode(payload: bytes) -> tuple[str, list | None]:
+    """One payload of the mixed web-crawl table → (fmt, spans). A gzip
+    payload is decompressed once and re-sniffed, so gzipped HTML and PDF
+    reach their own decoders rather than the container framing; a corrupt
+    gzip body quarantines as ``("container", None)``."""
+    if _is_gzip(payload):
+        payload = _gunzip(payload)
+        if payload is None:
+            return "container", None
+    fmt = sniff_format(payload)
+    return fmt, _MIXED_DECODERS[fmt](payload)
+
 
 MIXED_DECODED = StructType(
     [
@@ -258,16 +282,12 @@ def ingest_mixed(
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
-            fmts, spans = [], []
-            for b in pdf[payload_col]:
-                f = sniff_format(b)
-                fmts.append(f)
-                spans.append(_MIXED_DECODERS[f](b))
+            decoded = [sniff_decode(b) for b in pdf[payload_col]]
             yield pd.DataFrame(
                 {
                     "doc_id": pdf[id_col].astype(str),
-                    "fmt": fmts,
-                    "spans": spans,
+                    "fmt": [f for f, _ in decoded],
+                    "spans": [spans for _, spans in decoded],
                 }
             )
 
@@ -315,12 +335,10 @@ def ingest_warc(
             rows = []
             for wid, payload in zip(pdf[id_col], pdf[payload_col]):
                 for r in parse_warc(payload):
-                    f = sniff_format(r["body"])
                     rows.append(
                         (
                             str(wid), r["rec_idx"], r["rec_type"], r["url"],
-                            r["http_status"], r["content_type"], f,
-                            _MIXED_DECODERS[f](r["body"]),
+                            r["http_status"], r["content_type"], *sniff_decode(r["body"]),
                         )
                     )
             yield pd.DataFrame(

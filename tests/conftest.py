@@ -16,3 +16,14 @@ def spark():
     )
     yield s
     s.stop()
+
+
+@pytest.fixture()
+def persistent_rdd_ids(spark):
+    """→ a callable giving the ids of the RDDs registered as persistent
+    (cached or locally checkpointed) at the time of the call."""
+
+    def ids() -> set[int]:
+        return {int(k) for k in spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray()}
+
+    return ids

@@ -241,8 +241,27 @@ def test_py_twin_matches_columnar(spark):
             assert got[(doc, b["block_idx"])] == w, (doc, b)
 
 
+def _main_content_page() -> bytes:
+    long = " ".join(f"w{i}" for i in range(45))
+    return f'<!DOCTYPE html><html><nav><a href="/">home</a></nav><p>{long}</p></html>'.encode()
+
+
 def test_sniff_format():
-    from aide_spark.sources.binary_ingest import sniff_format
+    """Plus the gzip re-sniff: sniff_decode decompresses a gzip payload once
+    and re-sniffs it, so gzipped HTML gets the boilerplate strip (not the
+    raw markup as one container text span), gzipped PDFs and containers
+    decode as their plain forms, and a corrupt gzip body quarantines as
+    None without raising."""
+    import gzip
+
+    from aide_spark.sources.binary_ingest import (
+        decode_container,
+        decode_html,
+        encode_spans,
+        sniff_decode,
+        sniff_format,
+    )
+    from aide_spark.sources.pdf_codec import encode_pdf
 
     assert sniff_format(b"%PDF-1.4 ...") == "pdf"
     assert sniff_format(b"<!DOCTYPE html><html>...") == "html"
@@ -251,6 +270,36 @@ def test_sniff_format():
     assert sniff_format(b"plain text lines") == "container"
     assert sniff_format(b"\x1f\x8b\x08gzip...") == "container"
     assert sniff_format(None) == "container"
+
+    page = _main_content_page()
+    assert len(decode_html(page)) == 1
+    assert sniff_decode(page) == ("html", decode_html(page))
+    assert sniff_decode(gzip.compress(page)) == ("html", decode_html(page))
+    box = encode_spans([("text", "a", "", 0), ("media", "", "m1", 1)])
+    assert sniff_decode(gzip.compress(box)) == ("container", decode_container(box))
+    pdf = encode_pdf([("text", "statement 1", "", 0)])
+    assert sniff_decode(gzip.compress(pdf)) == sniff_decode(pdf)
+    assert sniff_decode(pdf)[0] == "pdf"
+    assert sniff_decode(b"\x1f\x8b\x08gzip...") == ("container", None)
+    assert sniff_decode(gzip.compress(page)[:-12]) == ("container", None)
+
+
+def test_ingest_mixed_gzipped_html(spark):
+    import gzip
+
+    from aide_spark.sources.binary_ingest import decode_html, ingest_mixed
+
+    page = _main_content_page()
+    df = spark.createDataFrame(
+        [("plain", page), ("gz", gzip.compress(page)), ("bad", b"\x1f\x8b\x08gzip...")],
+        "doc_id string, content binary",
+    )
+    rows = {r.doc_id: r for r in ingest_mixed(df).collect()}
+    want = [s["text"] for s in decode_html(page)]
+    for doc in ("plain", "gz"):
+        assert rows[doc].fmt == "html"
+        assert [s.text for s in rows[doc].spans] == want
+    assert rows["bad"].fmt == "container" and rows["bad"].spans is None
 
 
 def test_decode_html_strips_boilerplate():

@@ -419,16 +419,18 @@ def test_bucketed_join_is_shuffle_free(spark, tmp_path):
         spark.sql("DROP TABLE IF EXISTS t_labels_b")
 
 
-def test_pipeline_release_frees_checkpoint_blocks(spark):
-    """r6: run() materializes the parser outputs via lazy
-    localCheckpoint; pipeline.release must return the persistent-RDD
-    registry to its baseline (DataFrame.unpersist alone cannot free
-    checkpoint blocks), so a long-lived driver looping over batches does
-    not accumulate one store per batch."""
-    baseline = spark.sparkContext._jsc.getPersistentRDDs().size()
+def test_pipeline_release_frees_checkpoint_blocks(spark, persistent_rdd_ids):
+    """run() materializes three lazy localCheckpoints: the validated input
+    and the parsed transactions and metadata. pipeline.release must free
+    all three (DataFrame.unpersist alone cannot free checkpoint blocks), so
+    a long-lived driver looping over batches does not accumulate one store
+    per batch: no RDD registered by this run is still registered after the
+    release. Compares ids, not counts: frames of earlier tests that were
+    never released may be freed by the ContextCleaner mid-test."""
+    baseline = persistent_rdd_ids()
     docs = local_corpus_df(spark, 24)
     out = pipeline.run(docs)
     out["spans_out"].count()
-    assert spark.sparkContext._jsc.getPersistentRDDs().size() > baseline
+    assert len(persistent_rdd_ids() - baseline) == 3
     pipeline.release(out)
-    assert spark.sparkContext._jsc.getPersistentRDDs().size() == baseline
+    assert not persistent_rdd_ids() - baseline
