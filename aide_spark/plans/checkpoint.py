@@ -168,15 +168,17 @@ def run_with_resume(
     )
     store.stage(lineage, "lineage", batch_id)
 
-    # per-partition metrics computed on the PRODUCING plan (same persisted
-    # boundary the write consumed), so partition_id reflects the partitions
-    # that actually built the batch — a read-back groupBy would instead
-    # describe parquet split planning (file sizes / maxPartitionBytes)
+    # per-partition metrics of the spans assembly's own partitions (this
+    # re-runs the assembly above the parse checkpoints), so partition_id
+    # reflects the partitions that built the batch — a read-back groupBy
+    # would instead describe parquet split planning (file sizes /
+    # maxPartitionBytes). spans_out's window shuffles on doc_id, so each
+    # doc's rows share one partition and its seq-0 row counts it once.
     metrics = (
         out["spans_out"]
         .groupBy(F.spark_partition_id().alias("partition_id"))
         .agg(
-            F.countDistinct("doc_id").alias("docs"),
+            F.count_if(F.col("seq") == 0).alias("docs"),
             F.count(F.lit(1)).alias("spans"),
         )
         .withColumn("batch_id", F.lit(batch_id))

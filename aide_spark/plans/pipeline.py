@@ -17,14 +17,15 @@ Scale notes (100 TB, 1000 executors):
 * per-doc work ∝ span count ⇒ page-count skew; call
   :func:`aide_spark.operators.skew.repartition_by_span_count` before parsing
   when the corpus has heavy-tailed docs (SURVEY.md §4.1);
-* the final assembly joins are all on doc_id — co-partitioned equi-joins.
+* span assembly is a tagged union of the four span sources numbered by one
+  doc_id window — one shuffle above the parse checkpoints, no joins.
 """
 
 from __future__ import annotations
 
 from functools import reduce
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from .. import release_checkpoint
@@ -146,70 +147,48 @@ def spans_out(docs: DataFrame, parsed: dict[str, DataFrame]) -> DataFrame:
     """Assemble the ordered output span sequence per doc:
     meta spans → media pass-through → txn spans → summary span.
 
+    One tagged union of four narrow sources, each row
+    ``(doc_id, part, order, kind, text, media_ref)``, numbered by ONE
+    ``doc_id`` window: ``seq`` is the row's rank by (part, order, text) —
+    ``text`` breaks ties between transactions sharing an ``order``. The
+    same window keeps only docs whose first row is a meta span (part 0):
+    only parsed docs have a metadata row, and every metadata row yields at
+    least one meta span (``bank_name`` and ``currency`` are parser
+    literals), so media rows of invalid docs never surface and no
+    validation filter is needed here.
+
     ``docs`` is any frame with ``doc_id`` and ``spans`` covering the parsed
     docs: :func:`run` passes its checkpointed validated frame, and the RAW
-    documents table works too (r6). The media refs join in via a left join
-    keyed on the metadata side, which carries only validated docs — rows of
-    invalid docs on the media side never match, so no validation filter is
-    needed here (on raw docs it forced the page-split + media-fold columns
-    to be computed again on this branch)."""
-    meta_arr = parsed["metadata"].select(
-        "doc_id", meta_texts_col(F.col("metadata")).alias("meta_texts")
-    )
-    txn_arr = (
-        parsed["transactions"]
-        .withColumn("txn_text", txn_text_col())
-        .groupBy("doc_id")
-        .agg(
-            # field extraction from the sorted struct array via
-            # GetArrayStructFields (codegen) instead of a per-element
-            # interpreted transform lambda (r6, guide §4.1)
-            F.array_sort(F.collect_list(F.struct("order", "txn_text")))
-            .getField("txn_text")
-            .alias("txn_texts")
+    documents table works too (r6)."""
+
+    def part(n: int, df: DataFrame, kind: str, text: Column, media_ref: Column) -> DataFrame:
+        return df.select(
+            "doc_id", F.lit(n).alias("part"), "order",
+            F.lit(kind).alias("kind"), text.alias("text"), media_ref.alias("media_ref"),
         )
+
+    meta = parsed["metadata"].select(
+        "doc_id", F.posexplode(meta_texts_col(F.col("metadata"))).alias("order", "text")
     )
-    sum_arr = parsed["summaries"].select(
-        "doc_id", F.array(summary_text_col()).alias("summary_texts")
+    media = media_spans(docs).select(
+        "doc_id", F.posexplode("media_refs").alias("order", "media_ref")
     )
-    assembled = (
-        meta_arr.join(media_spans(docs), "doc_id", "left")
-        .join(txn_arr, "doc_id", "left")
-        .join(sum_arr, "doc_id", "left")
-        .select(
-            "doc_id",
-            F.concat(
-                F.transform(
-                    F.col("meta_texts"),
-                    lambda t: F.struct(F.lit("meta").alias("kind"), t.alias("text"),
-                                       F.lit("").alias("media_ref")),
-                ),
-                F.transform(
-                    F.coalesce(F.col("media_refs"), F.array()),
-                    lambda m: F.struct(F.lit("media").alias("kind"),
-                                       F.lit("").alias("text"), m.alias("media_ref")),
-                ),
-                F.transform(
-                    F.coalesce(F.col("txn_texts"), F.array().cast("array<string>")),
-                    lambda t: F.struct(F.lit("txn").alias("kind"), t.alias("text"),
-                                       F.lit("").alias("media_ref")),
-                ),
-                F.transform(
-                    F.coalesce(F.col("summary_texts"), F.array().cast("array<string>")),
-                    lambda t: F.struct(F.lit("summary").alias("kind"), t.alias("text"),
-                                       F.lit("").alias("media_ref")),
-                ),
-            ).alias("all_spans"),
+    summary = parsed["summaries"].withColumn("order", F.lit(0))
+    tagged = reduce(DataFrame.unionByName, [
+        part(0, meta, "meta", F.col("text"), F.lit("")),
+        part(1, media, "media", F.lit(""), F.col("media_ref")),
+        part(2, parsed["transactions"], "txn", txn_text_col(), F.lit("")),
+        part(3, summary, "summary", summary_text_col(), F.lit("")),
+    ])
+    w = Window.partitionBy("doc_id").orderBy("part", "order", "text")
+    return (
+        tagged.select(
+            "doc_id", "kind", "text", "media_ref",
+            (F.row_number().over(w) - 1).alias("seq"),
+            F.first("part").over(w).alias("first_part"),
         )
-    )
-    return assembled.select(
-        "doc_id", F.posexplode("all_spans").alias("seq", "s")
-    ).select(
-        "doc_id",
-        F.col("seq").cast("int").alias("seq"),
-        F.col("s.kind").alias("kind"),
-        F.col("s.text").alias("text"),
-        F.col("s.media_ref").alias("media_ref"),
+        .where(F.col("first_part") == 0)
+        .select("doc_id", "seq", "kind", "text", "media_ref")
     )
 
 

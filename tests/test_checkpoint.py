@@ -69,7 +69,10 @@ def test_lineage_and_metrics_written(spark, store):
     assert statuses == {"committed", "quarantined"}
     metrics = store.read(spark, "metrics")
     rows = metrics.collect()
-    assert sum(r.spans for r in rows) == store.read(spark, "spans").count()
+    spans = store.read(spark, "spans")
+    assert sum(r.spans for r in rows) == spans.count()
+    assert sum(r.docs for r in rows) == spans.select("doc_id").distinct().count()
+    assert rows and all(0 < r.docs <= r.spans for r in rows), rows
     quarantine = store.read(spark, "quarantine")
     assert quarantine.count() == lineage.where("status = 'quarantined'").count()
 

@@ -9,26 +9,45 @@ from __future__ import annotations
 from collections import defaultdict
 
 import pytest
+from pyspark.sql import functions as F
 
 from aide_spark.generator import corpus, local_corpus_df
 from aide_spark.plans import pipeline
+from aide_spark.serialize import meta_texts_col
 
 from .reference_oracle import expected_spans, span_diff
 
 N_DOCS = 72  # covers all 3 banks + two full taxonomy cycles
 
 
+def _by_doc(spans_out) -> dict[str, list[tuple]]:
+    spans = defaultdict(list)
+    for r in spans_out.collect():
+        spans[r.doc_id].append((r.seq, r.kind, r.text, r.media_ref))
+    for v in spans.values():
+        v.sort()
+    return dict(spans)
+
+
 @pytest.fixture(scope="module")
 def outputs(spark):
     docs = local_corpus_df(spark, N_DOCS)
     out = pipeline.run(docs)
-    spans = defaultdict(list)
-    for r in out["spans_out"].collect():
-        spans[r.doc_id].append((r.seq, r.kind, r.text, r.media_ref))
-    for v in spans.values():
-        v.sort()
     validation = {r.doc_id: r.asDict() for r in out["validation"].collect()}
-    return {"spans": dict(spans), "validation": validation}
+    meta = out["metadata"].select(
+        F.col("metadata.bank_name").alias("bank_name"),
+        F.col("metadata.currency").alias("currency"),
+        F.size(meta_texts_col(F.col("metadata"))).alias("n"),
+    ).collect()
+    return {
+        "spans": _by_doc(out["spans_out"]),
+        # spans_out over the RAW documents: media of invalid docs in scope
+        "raw_spans": _by_doc(pipeline.spans_out(docs, out)),
+        "invalid_media": docs.where(F.exists("spans", lambda s: s["kind"] == "media"))
+        .join(out["quarantine"], "doc_id", "left_semi").count(),
+        "validation": validation,
+        "meta": meta,
+    }
 
 
 def _parsed_docs():
@@ -62,3 +81,18 @@ def test_quarantined_docs_not_parsed(outputs):
     for doc_id, v in outputs["validation"].items():
         if not v["is_valid"]:
             assert doc_id not in outputs["spans"]
+
+
+def test_spans_out_input_contract(outputs):
+    """spans_out keeps only docs whose first span is a meta span, so it may
+    be given the raw documents: invalid docs (some carrying media) emit
+    nothing, and the rows equal those from the validated frame. That rule
+    needs every metadata row to yield a meta span — bank_name and currency
+    are literals in all three parsers."""
+    assert outputs["invalid_media"] > 0
+    assert outputs["raw_spans"] == outputs["spans"]
+    assert outputs["meta"] and all(
+        r.bank_name is not None and r.currency is not None and r.n >= 2 for r in outputs["meta"]
+    )
+    for doc_id, seq in outputs["spans"].items():
+        assert seq[0][:2] == (0, "meta"), doc_id

@@ -67,7 +67,16 @@ def test_full_pipeline_shuffle_budget(spark):
     docs = local_corpus_df(spark, 24)
     out = pipeline.run(docs)
     n = explain_shuffles(out["spans_out"])
-    assert n <= 30, f"spans_out shuffles: {n}"
+    assert n <= 5, f"spans_out shuffles: {n}"
+
+
+def test_spans_out_assembly_is_one_shuffle(spark):
+    """Above the parse checkpoints the span assembly is one tagged union
+    numbered by one doc_id window: the summaries' Exchanges plus exactly
+    one — no joins, no per-doc collect_list."""
+    out = pipeline.run(local_corpus_df(spark, 24))
+    n = explain_shuffles(out["spans_out"]) - explain_shuffles(out["summaries"])
+    assert n == 1, _plan(out["spans_out"])
 
 
 def test_skew_repartition_balances_heavy_docs(spark):
