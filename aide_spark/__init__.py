@@ -21,8 +21,8 @@ Layout:
 
 Importing the package starts no Spark job and sets no conf. Sessions that
 run the pipeline add :data:`CODEGEN_CACHE` to their builder and may call
-:func:`warm` once after ``getOrCreate()``. :func:`release_checkpoint` frees
-the blocks of a ``localCheckpoint`` frame.
+:func:`warm`, one codegen warm-up query, once after ``getOrCreate()``.
+:func:`release_checkpoint` frees the blocks of a ``localCheckpoint`` frame.
 """
 
 __version__ = "0.1.0"
@@ -41,59 +41,32 @@ _log = logging.getLogger(__name__)
 CODEGEN_CACHE = ("spark.sql.codegen.cache.maxEntries", "2000")
 
 
-def _warm_collation(spark) -> None:
-    """Spark 4 routes lower/upper/initcap through ICU; the first call in a
-    JVM pays its case-table init (~2 s on an idle core, 7-11 s inside a busy
-    stage, OPTIMIZATION_r06.md). A constant-folded 1-row query pays it on
-    the driver, which is the executor JVM in local mode."""
-    spark.sql("SELECT lower('Σ') AS w").collect()
-
-
-def _warm_codegen(spark) -> None:
-    """The first whole-stage compilation loads Janino and the aggregate,
-    broadcast-join, window and sort operator classes (~0.5-1 s). A 4-row
-    in-memory query exercises each of them once."""
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    base = spark.range(0, 4, 1, 2).select((F.col("id") % 2).alias("k"), F.col("id").alias("v"))
-    agg = base.groupBy("k").agg(F.sum("v").alias("sv"))
-    out = (
-        base.join(F.broadcast(agg), "k")
-        .withColumn("rn", F.row_number().over(Window.partitionBy("k").orderBy("v")))
-        .orderBy("k", "rn")
-    )
-    out.write.format("noop").mode("overwrite").save()
-
-
-def _worker_warm_pass(it):
-    """Identity pass for the worker warm; module-level so executors pickle
-    it by reference and perform the package import."""
-    import aide_spark.queries  # noqa: F401 — the cost being prewarmed
-
-    yield from it
-
-
-def _warm_python_workers(spark) -> None:
-    """The first Arrow-batched query forks one Python worker per core and
-    imports this package in each (~2-3 s on 32 cores): the fixed boundary
-    cost, apart from any UDF body. Workers are reused, so one mapInPandas
-    job over ``defaultParallelism`` partitions pays it once per session."""
-    n = spark.sparkContext.defaultParallelism
-    df = spark.range(0, n, 1, n).mapInPandas(_worker_warm_pass, "id long")
-    df.write.format("noop").mode("overwrite").save()
-
-
 def warm(spark) -> None:
-    """Pay the per-JVM and per-worker start-up costs of ``spark`` up front:
-    ICU case mapping, the codegen/operator classes and the Python worker
-    pool. Reads no data and caches nothing. A failed warm is logged and the
-    rest still run; a session without them is only slower on first use."""
-    for warm_one in (_warm_collation, _warm_codegen, _warm_python_workers):
-        try:
-            warm_one(spark)
-        except Exception:
-            _log.warning("aide_spark.warm: %s failed", warm_one.__name__, exc_info=True)
+    """Run one 4-row in-memory query on ``spark`` before the first job:
+    aggregate, broadcast join, ``row_number`` window, sort and a ``noop``
+    write. It pays the session's first-job cost and loads Janino and those
+    operators' codegen classes, which the extraction job would otherwise pay
+    inside its first stage. Reads no data and caches nothing. A failed warm
+    is logged and not raised; a session without it is only slower on first
+    use.
+
+    There is no ICU (``lower``) or Python-worker warm: the extraction job
+    calls no ICU-routed function, and pre-forking the workers cost set-up
+    more than it saved the first ``mapInPandas`` job."""
+    try:
+        from pyspark.sql import Window
+        from pyspark.sql import functions as F
+
+        base = spark.range(0, 4, 1, 2).select((F.col("id") % 2).alias("k"), F.col("id").alias("v"))
+        agg = base.groupBy("k").agg(F.sum("v").alias("sv"))
+        out = (
+            base.join(F.broadcast(agg), "k")
+            .withColumn("rn", F.row_number().over(Window.partitionBy("k").orderBy("v")))
+            .orderBy("k", "rn")
+        )
+        out.write.format("noop").mode("overwrite").save()
+    except Exception:
+        _log.warning("aide_spark.warm failed", exc_info=True)
 
 
 def release_checkpoint(df) -> None:

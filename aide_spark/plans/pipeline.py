@@ -31,12 +31,10 @@ from pyspark.sql import functions as F
 from .. import release_checkpoint
 from ..operators import apgvb_parser, canara_parser, union_parser, validation
 from ..operators.lines import head_lines_frame, line_table
+from ..schemas import SUMMARY
 from ..serialize import meta_texts_col, summary_text_col, txn_text_col
 
-SUMMARY_COLS = [
-    "doc_id", "opening_balance", "closing_balance", "total_debits",
-    "total_credits", "net_change", "transaction_count", "from_date", "to_date",
-]
+SUMMARY_COLS = SUMMARY.fieldNames()
 
 # bank_id → parser module; every loop over the banks goes in this order,
 # which is the order of the transactions/metadata/summaries unions

@@ -153,8 +153,8 @@ SPANS_OUT = StructType(
     [
         StructField("doc_id", StringType(), False),
         StructField("seq", IntegerType(), False),
-        StructField("kind", StringType(), False),   # 'meta' | 'media' | 'txn' | 'summary'
-        StructField("text", StringType(), True),
-        StructField("media_ref", StringType(), True),
+        StructField("kind", StringType(), False),       # 'meta' | 'media' | 'txn' | 'summary'
+        StructField("text", StringType(), False),       # '' for media
+        StructField("media_ref", StringType(), False),  # '' unless kind='media'
     ]
 )

@@ -6,14 +6,17 @@ expected sequences come from ``goldens/parity_spans.json``."""
 
 from __future__ import annotations
 
+import json
 from collections import defaultdict
 
 import pytest
 from pyspark.sql import functions as F
 
+from aide_spark import schemas
 from aide_spark.generator import corpus, local_corpus_df
 from aide_spark.plans import pipeline
 from aide_spark.serialize import meta_texts_col
+from aide_spark.sources.tables import results_json_view
 
 from .reference_oracle import expected_spans, span_diff
 
@@ -47,6 +50,17 @@ def outputs(spark):
         .join(out["quarantine"], "doc_id", "left_semi").count(),
         "validation": validation,
         "meta": meta,
+        "results": out["results"].collect(),
+        "results_json": {
+            r.doc_id: json.loads(r.json) for r in results_json_view(out["results"]).collect()
+        },
+        "schemas": {
+            "transactions": out["transactions"].drop("bank_id").schema,
+            "metadata": out["metadata"].schema["metadata"].dataType,
+            "summaries": out["summaries"].schema,
+            "validation": out["validation"].schema,
+            "spans_out": out["spans_out"].schema,
+        },
     }
 
 
@@ -96,3 +110,38 @@ def test_spans_out_input_contract(outputs):
     )
     for doc_id, seq in outputs["spans"].items():
         assert seq[0][:2] == (0, "meta"), doc_id
+
+
+@pytest.mark.parametrize("table, declared", [
+    ("transactions", schemas.TRANSACTIONS_OUT),
+    ("metadata", schemas.METADATA),
+    ("summaries", schemas.SUMMARY),
+    ("validation", schemas.VALIDATION),
+    ("spans_out", schemas.SPANS_OUT),
+])
+def test_stage_schemas_match_declared(outputs, table, declared):
+    """Each stage boundary carries its declared ``schemas`` type: column
+    names, order and types (``simpleString`` leaves out nullability). The
+    transactions are compared without the routing column ``bank_id`` and
+    the metadata as its struct column."""
+    assert outputs["schemas"][table].simpleString() == declared.simpleString()
+
+
+def test_spans_out_schema_is_declared_exactly(outputs):
+    assert outputs["schemas"]["spans_out"] == schemas.SPANS_OUT
+
+
+def test_results_envelope(outputs):
+    """The STANDARD_RESPONSE_SCHEMA analogue: one row per doc that emitted
+    spans, its transaction counts equal to the doc's txn spans, and its
+    transactions array in ``order``; the JSON view renders the same rows."""
+    results = outputs["results"]
+    assert [r.doc_id for r in results] and len({r.doc_id for r in results}) == len(results)
+    assert {r.doc_id for r in results} == set(outputs["spans"])
+    for r in results:
+        n_txn = sum(1 for span in outputs["spans"][r.doc_id] if span[1] == "txn")
+        assert r.total_transactions == n_txn, r.doc_id
+        assert r.financial_summary.transaction_count == n_txn, r.doc_id
+        orders = [t.order for t in r.transactions or []]
+        assert orders == sorted(orders), r.doc_id
+        assert outputs["results_json"][r.doc_id]["total_transactions"] == n_txn, r.doc_id

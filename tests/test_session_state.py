@@ -1,7 +1,8 @@
 """The engine leaves the caller's session alone: importing it runs no Spark
 job and changes no conf, start-up warming happens only through an explicit
-``aide_spark.warm(spark)``, and the components loop sizes its shuffles
-without writing the session's shuffle width."""
+``aide_spark.warm(spark)``, one warm-up query that logs rather than raises
+a failure, and the components loop sizes its shuffles without writing the
+session's shuffle width."""
 
 from __future__ import annotations
 
@@ -67,23 +68,20 @@ def test_warm_runs_jobs_and_raises_nothing(spark, caplog):
     before = set(tracker.getJobIdsForGroup())
     with caplog.at_level("WARNING", logger="aide_spark"):
         aide_spark.warm(spark)
-    assert len(set(tracker.getJobIdsForGroup()) - before) >= 3  # one per warm at least
+    assert set(tracker.getJobIdsForGroup()) - before
     assert not caplog.records
 
 
-def test_warm_logs_a_failed_warm_and_runs_the_rest(spark, caplog, monkeypatch):
+def test_warm_logs_a_failure_and_raises_nothing(caplog):
     import aide_spark
 
-    def broken(_spark):
-        raise RuntimeError("boom")
+    class BrokenSession:
+        def range(self, *args):
+            raise RuntimeError("boom")
 
-    monkeypatch.setattr(aide_spark, "_warm_collation", broken)
-    tracker = spark.sparkContext.statusTracker()
-    before = set(tracker.getJobIdsForGroup())
     with caplog.at_level("WARNING", logger="aide_spark"):
-        aide_spark.warm(spark)
-    assert [r.getMessage() for r in caplog.records] == ["aide_spark.warm: broken failed"]
-    assert set(tracker.getJobIdsForGroup()) - before  # the other warms ran
+        aide_spark.warm(BrokenSession())
+    assert [r.getMessage() for r in caplog.records] == ["aide_spark.warm failed"]
 
 
 def test_connected_components_sets_no_session_conf(spark, monkeypatch):
