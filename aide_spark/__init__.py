@@ -20,7 +20,8 @@ Layout:
     streaming    - Structured Streaming variants
 
 Importing the package starts no Spark job and sets no conf. Sessions that
-run the pipeline add :data:`CODEGEN_CACHE` to their builder and may call
+run the pipeline pass :data:`SESSION_CONF` to their builder
+(``SparkSession.builder.config(map=aide_spark.SESSION_CONF)``) and may call
 :func:`warm`, one codegen warm-up query, once after ``getOrCreate()``.
 :func:`release_checkpoint` frees the blocks of a ``localCheckpoint`` frame.
 """
@@ -32,13 +33,28 @@ import warnings
 
 _log = logging.getLogger(__name__)
 
-# Builder config for sessions that run the extraction pipeline. One run
-# generates ~245 codegen classes; Spark's compiled-class cache holds 100 by
-# default, so every run evicts and re-compiles them (~2.4 s of a 7.6 s
-# pipeline run in r6). A 300-doc run repeated in one local[4] session
-# compiled 249 classes again at 100 entries and 0 at 2000 (Spark 4.1.2).
-# The conf is static: set it on the builder, before the session exists.
-CODEGEN_CACHE = ("spark.sql.codegen.cache.maxEntries", "2000")
+# Builder config for sessions that run the extraction pipeline, applied
+# with ``SparkSession.builder.config(map=SESSION_CONF)``. Both keys must be
+# set before the session exists: the first is a static conf, and PySpark
+# reads the second once per process, at its first Column call.
+#
+# spark.sql.codegen.cache.maxEntries: one run generates ~245 codegen
+# classes; Spark's compiled-class cache holds 100 by default, so every run
+# evicts and re-compiles them (~2.4 s of a 7.6 s pipeline run in r6). A
+# 300-doc run repeated in one local[4] session compiled 249 classes again
+# at 100 entries and 0 at 2000 (Spark 4.1.2).
+#
+# spark.python.sql.dataFrameDebugging.enabled: PySpark 4.1 wraps every
+# Column method and ``F.col``/``F.when``/... in call-site capture, about 10
+# extra py4j round trips per call (``F.col`` 13 → 3, ``Column.alias``
+# 11 → 1). Building one pipeline plan makes thousands of such calls; with
+# capture off a 12-doc ``pipeline.run`` makes under half the round trips.
+# The cost: a runtime error's message loses its "DataFrame ... was called
+# from file:line" fragment; the Python traceback still names the call.
+SESSION_CONF = {
+    "spark.sql.codegen.cache.maxEntries": "2000",
+    "spark.python.sql.dataFrameDebugging.enabled": "false",
+}
 
 
 def warm(spark) -> None:

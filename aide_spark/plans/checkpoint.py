@@ -22,7 +22,12 @@ per batch that saw it (doc_id, batch_id, status ∈ committed/quarantined/
 skipped, error_code) — 'skipped' rows audit resume decisions, and the commit
 stats count them as the lineage is written; the metrics table has one
 row per Spark partition per batch (partition_id, docs, spans) — the
-north-rule observability surface.
+north-rule observability surface. It is counted from the batch's own staged
+spans files, one ``part-NNNNN`` file per partition of the span assembly, so
+the assembly runs once per batch.
+
+Every table has a declared schema (:data:`TABLES`, from ``schemas``) and is
+read with it: a snapshot read lists files but starts no Spark job.
 """
 
 from __future__ import annotations
@@ -35,9 +40,16 @@ import uuid
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+from .. import schemas
 from . import pipeline
 
-TABLES = ("spans", "lineage", "metrics", "quarantine")
+# table -> the schema its staged batches are written and read with
+TABLES = {
+    "spans": schemas.SPANS_OUT,
+    "lineage": schemas.LINEAGE,
+    "metrics": schemas.METRICS,
+    "quarantine": schemas.QUARANTINE,
+}
 
 
 class SnapshotStore:
@@ -87,7 +99,9 @@ class SnapshotStore:
 
         Time travel compares COMMIT TIMESTAMPS, not batch-id strings: ids
         are heterogeneous ('stream-<n>' vs timestamp-prefixed) and do not
-        order lexicographically. Unknown ``as_of`` raises KeyError."""
+        order lexicographically. Unknown ``as_of`` raises KeyError.
+        The batches are read with the table's declared schema, so the read
+        starts no schema-inference job."""
         commits = self.committed()
         if as_of is not None:
             by_id = {c["batch_id"]: c["ts"] for c in commits}
@@ -102,7 +116,7 @@ class SnapshotStore:
         ]
         if not paths:
             return None
-        return spark.read.parquet(*paths)
+        return spark.read.schema(TABLES[table]).parquet(*paths)
 
 
 def run_with_resume(
@@ -145,7 +159,7 @@ def run_with_resume(
     # session cannot collide.
     span_stats, lineage_stats = Observation(), Observation()
     out = pipeline.run(pending)
-    store.stage(
+    spans_path = store.stage(
         out["spans_out"].observe(span_stats, F.count(F.lit(1)).alias("n")), "spans", batch_id
     )
     store.stage(out["quarantine"], "quarantine", batch_id)
@@ -168,15 +182,16 @@ def run_with_resume(
     )
     store.stage(lineage, "lineage", batch_id)
 
-    # per-partition metrics of the spans assembly's own partitions (this
-    # re-runs the assembly above the parse checkpoints), so partition_id
-    # reflects the partitions that built the batch — a read-back groupBy
-    # would instead describe parquet split planning (file sizes /
-    # maxPartitionBytes). spans_out's window shuffles on doc_id, so each
-    # doc's rows share one partition and its seq-0 row counts it once.
+    # per-partition metrics from the spans files just written, read back
+    # pruned to seq, instead of running the assembly again: each write task
+    # writes one part-NNNNN file numbered by its partition, the assembly's
+    # partition. spans_out's window shuffles on doc_id, so each doc's rows
+    # share one file and its seq-0 row counts it once.
+    part_no = F.regexp_extract(F.col("_metadata.file_name"), r"^part-(\d+)", 1)
     metrics = (
-        out["spans_out"]
-        .groupBy(F.spark_partition_id().alias("partition_id"))
+        spark.read.schema("seq int")
+        .parquet(spans_path)
+        .groupBy(part_no.cast("int").alias("partition_id"))
         .agg(
             F.count_if(F.col("seq") == 0).alias("docs"),
             F.count(F.lit(1)).alias("spans"),

@@ -91,6 +91,12 @@ _TABLE_CACHE: dict[tuple[str, str, str], DataFrame] = {}
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """The memoized reader of ``<sf_dir>/<name>.parquet``.
+
+    Invariant: a table is written at most once per session before it is
+    read. The memoized reader holds the file listing and schema of its first
+    call, so a table rewritten or appended later in the same session is
+    read stale (or from deleted files) until :func:`clear_table_cache`."""
     key = (spark.sparkContext.applicationId, sf_dir, name)
     df = _TABLE_CACHE.get(key)
     if df is None:
@@ -99,6 +105,12 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
         _TABLE_CACHE[key] = df
     return df
+
+
+def clear_table_cache() -> None:
+    """Drop every memoized reader: call after rewriting a table that the
+    board has already read in this session."""
+    _TABLE_CACHE.clear()
 
 
 def _cents(col) -> Column:

@@ -158,3 +158,35 @@ SPANS_OUT = StructType(
         StructField("media_ref", StringType(), False),  # '' unless kind='media'
     ]
 )
+
+# ---------------------------------------------------------------------------
+# SnapshotStore tables (plans/checkpoint.py), written and read with these
+# schemas; ``spans`` is stored as SPANS_OUT.
+# ---------------------------------------------------------------------------
+
+LINEAGE = StructType(
+    [
+        StructField("doc_id", StringType(), False),
+        StructField("batch_id", StringType(), False),
+        StructField("status", StringType(), False),     # committed | quarantined | skipped
+        StructField("error_code", StringType(), True),  # null for skipped
+    ]
+)
+
+QUARANTINE = StructType(
+    [
+        StructField("doc_id", StringType(), False),
+        StructField("bank_id", StringType(), True),
+        StructField("error_code", StringType(), False),
+        StructField("pdf_type", StringType(), False),
+    ]
+)
+
+METRICS = StructType(
+    [
+        StructField("partition_id", IntegerType(), False),  # part-NNNNN of the spans file
+        StructField("docs", LongType(), False),
+        StructField("spans", LongType(), False),
+        StructField("batch_id", StringType(), False),
+    ]
+)

@@ -56,7 +56,7 @@ HEADLINE = [
 
 
 def build_spark(cpus: int):
-    """The bench session with ``aide_spark``'s codegen cache size, warmed."""
+    """The bench session with ``aide_spark.SESSION_CONF``, warmed."""
     from pyspark.sql import SparkSession
 
     import aide_spark
@@ -74,7 +74,7 @@ def build_spark(cpus: int):
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
-        .config(*aide_spark.CODEGEN_CACHE)
+        .config(map=aide_spark.SESSION_CONF)
         .getOrCreate()
     )
     aide_spark.warm(spark)

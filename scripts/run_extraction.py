@@ -45,7 +45,7 @@ def build_raw_docs(spark, input_path: str, passwords_path: str | None = None):
         )
     )
     if passwords_path:
-        pw = spark.read.parquet(passwords_path).select("doc_id", "password")
+        pw = spark.read.schema("doc_id string, password string").parquet(passwords_path)
         raw = raw.join(F.broadcast(pw), "doc_id", "left")
     else:
         raw = raw.withColumn("password", F.lit(None).cast("string"))
@@ -83,7 +83,7 @@ def main() -> None:
 
     import aide_spark
 
-    builder = SparkSession.builder.appName("aide-spark-extract").config(*aide_spark.CODEGEN_CACHE)
+    builder = SparkSession.builder.appName("aide-spark-extract").config(map=aide_spark.SESSION_CONF)
     if args.shuffle_partitions:
         builder = builder.config("spark.sql.shuffle.partitions", args.shuffle_partitions)
     spark = builder.getOrCreate()
