@@ -4,12 +4,15 @@ the one window skeleton the three bank parsers share.
 The reference walks ``pdf_reader.pages[i].extract_text().split('\\n')``
 (union_bank_extractor.py:237-257, canara_bank_extractor.py:186-226,
 apgvb_extractor.py:553-614,666-671). Here the canonical input is already a
-span table, so:
+span table, and :func:`pages_col` is the one page split: the text spans
+joined by '\\n', split on form-feed marker spans — a pure array expression
+per doc, zero shuffle. Validation, the line table and the metadata head
+lines all read it:
 
-* pages  = the text spans joined by '\\n', split on form-feed marker spans —
-  a pure array expression per doc, zero shuffle;
-* lines  = ``posexplode`` of text spans + one window over ``doc_id`` to
-  assign page numbers (1 + number of page-break spans before the span).
+* lines = ``posexplode`` of the pages, then ``posexplode`` of each page's
+  '\\n' split — two Generates, no window; a page with no text lines is the
+  reference's ``''.split('\\n')``, one ``''`` line;
+* head lines = the same split of page 1 (APGVB: of pages 1-2).
 
 Parsers read the line table in ONE order, :func:`doc_window` (``doc_id``
 by ``off``). The reference's per-page loops become that order plus a page
@@ -53,16 +56,6 @@ def pages_col(spans: Column) -> Column:
     return F.split(F.array_join(texts, "\n"), _BREAK_RE)
 
 
-def _nth_break_cut(spans: Column, n: int) -> Column:
-    """Offset of the ``n``-th PAGE_BREAK span (NULL when there are fewer) —
-    a span sits on page <= n iff its offset is below this cut (``offset`` is
-    the total order within the doc, see :func:`line_table`)."""
-    breaks = F.filter(
-        spans, lambda s: (s["kind"] == "text") & (s["text"] == PAGE_BREAK)
-    )
-    return F.try_element_at(breaks, F.lit(n)).getField("offset")
-
-
 def media_in_first_pages(spans: Column, n_pages: int = 5) -> Column:
     """V6 image probe: any media span within the first N pages
     (pdf_validator.py:209-232). Single array-fold, no shuffle.
@@ -93,93 +86,42 @@ def line_table(docs: DataFrame, carry: tuple[str, ...] = ()) -> DataFrame:
     """Explode documents into ``(doc_id, page, off, line)`` (+ ``carry``
     columns, e.g. the routing dimension ``bank_id``).
 
-    ``off`` is the global span offset (total order within the doc); ``page``
-    is 1-based. Page-break markers and media spans are dropped — parsers see
-    the same stripped line stream the reference iterates.
+    ``page`` is 1-based; ``off`` packs (page, line-in-page) into one long,
+    the total line order within the doc. Each line is Python-stripped, the
+    same stream the reference iterates.
     """
-    spans = docs.select("doc_id", *carry, F.posexplode("spans").alias("pos", "s"))
-    w = Window.partitionBy("doc_id").orderBy("pos")
-    is_break = (F.col("s.kind") == "text") & (F.col("s.text") == PAGE_BREAK)
-    return (
-        spans.withColumn(
-            "page",
-            (
-                F.lit(1)
-                + F.coalesce(
-                    F.sum(is_break.cast("int")).over(
-                        w.rowsBetween(Window.unboundedPreceding, -1)
-                    ),
-                    F.lit(0),
-                )
-            ).cast("int"),
-        )
-        .where((F.col("s.kind") == "text") & ~is_break)
-        .select(
-            "doc_id",
-            *carry,
-            "page",
-            F.col("s.offset").alias("off"),
-            py_strip(F.col("s.text")).alias("line"),
-        )
+    pages = docs.select(
+        "doc_id", *carry, F.posexplode(pages_col(F.col("spans"))).alias("p", "text")
+    )
+    lines = pages.select(
+        "doc_id", *carry, "p", F.posexplode(F.split("text", "\n")).alias("i", "line")
+    )
+    return lines.select(
+        "doc_id",
+        *carry,
+        (F.col("p") + 1).alias("page"),
+        (F.shiftleft(F.col("p").cast("long"), 32) + F.col("i")).alias("off"),
+        py_strip(F.col("line")).alias("line"),
     )
 
 
 def head_lines_frame(docs: DataFrame, two_pages: bool = False) -> DataFrame:
-    """(doc_id, arr) — the first-page (or two-page) trimmed line ARRAY as a
-    zero-shuffle chain of array expressions over the spans column (r6). It
-    replaced a per-doc ``collect_list`` over the exploded line table plus a
-    left join back to the branch docs, and is row-for-row identical to it.
+    """(doc_id, arr) — the Python-stripped line ARRAY of page 1, or for
+    ``two_pages`` of APGVB's ``page1 + '\\n' + page2 + '\\n'`` assembly, each
+    split on '\\n' as the reference splits it. A narrow projection over the
+    spans column, no shuffle.
 
-    Equivalences with the join path:
-    * lines of pages <= N = text spans (breaks excluded) before the N-th
-      PAGE_BREAK, in offset order = array order (offset is the total order);
-    * each line is Python-stripped, exactly as ``line_table`` emits it;
-    * a doc with NO qualifying lines maps to the join-miss default the
-      pipeline coalesced in ([''] for one page, ['', ''] for two);
-    * ``two_pages`` appends the trailing '' of APGVB's page1+page2+'\\n'
-      assembly to non-empty arrays. An empty page among the first two
-      contributes one extra '' line in the reference's split that the
-      array cannot see — inert, since every metadata probe requires
-      non-empty content (the generator emits such docs; span parity holds).
-
-    Motivation (guide §2.4 — remove shuffles outright): the metadata branch
-    previously exploded every span of every page, ran the page-number
-    window, shuffled the head lines into a per-doc collect_list and joined
-    them back to the branch docs. All of that existed to build this array;
-    building it in place makes the metadata input a narrow projection with
-    zero shuffles.
-
-    Staging discipline: every intermediate that a later lambda references
-    (``_cut``, ``_kept``) is materialized behind a one-element ``explode``
-    — a Generate node projections cannot collapse through. A Column
-    embedded inside a lambda is re-evaluated PER ARRAY ELEMENT, so an
-    unstaged ``_cut`` turns the break scan into O(spans²) per doc, and
-    CollapseProject inlines plain aliases into lambda bodies (the
-    non-cheap-duplication guard does not see lambda-nested references).
+    ``arr`` is staged behind a one-element ``explode`` — a Generate node
+    projections cannot collapse through: the metadata lambdas reference it,
+    and a Column inlined into a lambda body is re-evaluated per element.
     """
-    pages = 2 if two_pages else 1
-    staged = docs.select(
-        "doc_id",
-        "spans",
-        F.explode(F.array(_nth_break_cut(F.col("spans"), pages))).alias("_cut"),
-    )
-    cut = F.col("_cut")
-    kept = F.filter(
-        F.col("spans"),
-        lambda s: (s["kind"] == "text")
-        & (s["text"] != PAGE_BREAK)
-        & (cut.isNull() | (s["offset"] < cut)),
-    )
-    staged = staged.select("doc_id", F.explode(F.array(kept)).alias("_kept"))
-    arr = F.transform(F.col("_kept"), lambda s: py_strip(s["text"]))
+    pages = pages_col(F.col("spans"))
     if two_pages:
-        filled = F.concat(arr, F.array(F.lit("")))
-        default = F.array(F.lit(""), F.lit(""))
+        head = F.concat(F.array_join(F.slice(pages, 1, 2), "\n"), F.lit("\n"))
     else:
-        filled = arr
-        default = F.array(F.lit(""))
-    final = F.when(F.size("_kept") > 0, filled).otherwise(default)
-    return staged.select("doc_id", F.explode(F.array(final)).alias("arr"))
+        head = F.element_at(pages, 1)
+    arr = F.transform(F.split(head, "\n"), py_strip)
+    return docs.select("doc_id", F.explode(F.array(arr)).alias("arr"))
 
 
 def doc_window() -> WindowSpec:

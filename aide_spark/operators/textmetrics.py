@@ -45,105 +45,9 @@ def word_ngrams(words: Column, n: int) -> Column:
     )
 
 
-def exploded_word_ngrams(
-    docs: DataFrame, n: int, extra_cols: list[str] | None = None
-) -> DataFrame:
-    """One row per word ``n``-gram occurrence: (doc_id, *extra_cols, gram).
-
-    Codegen form (r6, guide §4.1): split the text ONCE into a projected
-    column, explode the valid start positions (a plain Generate), and
-    assemble each gram with ``get()`` + ``concat_ws`` — all whole-stage
-    codegen. The previous ``explode(word_ngrams(...))`` built a per-doc
-    gram ARRAY through an interpreted transform() lambda that re-evaluated
-    ``split(text)`` per gram index (O(words²) per doc, interpreted eval —
-    the same trap measured on the MinHash shingle explode). Rows are
-    identical: same grams, same multiplicity, docs with < n words (or NULL
-    text) emit nothing, exactly as the array form did.
-    """
-    words = F.split(F.col("text"), r"\s+")
-    base = docs.select(
-        "doc_id", *(extra_cols or []), words.alias("_ws")
-    )
-    pos = base.select(
-        "doc_id",
-        *(extra_cols or []),
-        "_ws",
-        F.explode(
-            F.when(
-                F.size("_ws") >= n,
-                F.sequence(F.lit(1), F.size("_ws") - (n - 1)),
-            ).otherwise(F.array().cast("array<int>"))
-        ).alias("_i"),
-    )
-    # _i is 1-based (sequence start), get() is 0-based: word k of the gram
-    # starting at position _i is _ws[_i - 1 + k]
-    gram = F.concat_ws(
-        " ", *[F.get("_ws", F.col("_i") - 1 + k) for k in range(n)]
-    )
-    return pos.select("doc_id", *(extra_cols or []), gram.alias("gram"))
-
-
-def _gram_counts(docs: DataFrame, n: int) -> DataFrame:
-    """(doc_id, n_chars, gram, cnt) — one explode + one hash aggregate."""
-    with_chars = docs.select(
-        "doc_id", "text", F.length("text").cast("long").alias("n_chars")
-    )
-    return (
-        exploded_word_ngrams(with_chars, n, extra_cols=["n_chars"])
-        .groupBy("doc_id", "n_chars", "gram")
-        .agg(F.count("*").alias("cnt"))
-    )
-
-
 def _ppm(num: Column, den: Column) -> Column:
     return F.floor(num.cast("double") * 1000000.0 / F.greatest(den, F.lit(1))).cast(
         "long"
-    )
-
-
-def top_ngram_char_ppm(docs: DataFrame, n: int) -> DataFrame:
-    """Per doc: chars covered by the most frequent word n-gram, in ppm.
-
-    Gopher's "fraction of characters contained within the most
-    frequently-occurring n-gram": ``cnt * length(gram) / n_chars``.
-    Ties break to the lexicographically smallest gram (deterministic —
-    cross-engine hashable). Returns (doc_id, top{n}gram_ppm).
-    """
-    c = _gram_counts(docs, n)
-    # min(struct(-cnt, gram)) = max cnt, tie -> smallest gram
-    pick = F.min(F.struct((-F.col("cnt")).alias("neg"), F.col("gram").alias("g")))
-    return (
-        c.groupBy("doc_id", "n_chars")
-        .agg(pick.alias("top"))
-        .select(
-            "doc_id",
-            _ppm(
-                (-F.col("top.neg")) * F.length("top.g"), F.col("n_chars")
-            ).alias(f"top{n}gram_ppm"),
-        )
-    )
-
-
-def dup_word_ppm(docs: DataFrame) -> DataFrame:
-    """Per doc: fraction of words that are repeats of an earlier word
-    (occurrences beyond each word's first), in ppm — the word-level
-    analogue of Gopher's duplicate-line fraction for corpora without
-    line structure. Returns (doc_id, dup_word_ppm).
-    """
-    words = F.split(F.col("text"), r"\s+")
-    c = (
-        docs.select(
-            "doc_id",
-            F.size(words).cast("long").alias("n_words"),
-            F.explode(words).alias("w"),
-        )
-        .groupBy("doc_id", "n_words", "w")
-        .agg(F.count("*").alias("cnt"))
-    )
-    return (
-        c.groupBy("doc_id", "n_words")
-        .agg(F.sum(F.col("cnt") - 1).alias("dups"))
-        .select("doc_id", _ppm(F.col("dups"), F.col("n_words")).alias("dup_word_ppm"))
     )
 
 
@@ -200,8 +104,8 @@ def repetition_signals(docs: DataFrame) -> DataFrame:
         F.min("n_chars").alias("n_chars"),
         F.min("n_words").alias("n_words"),
     )
-    # min(struct(-cnt, gram)) = max cnt, tie -> smallest gram (same pick as
-    # the standalone top_ngram_char_ppm); min/sum ignore the other tags
+    # min(struct(-cnt, gram)) = max cnt, tie -> smallest gram; min/sum
+    # ignore the other tags
     per = counts.groupBy("doc_id").agg(
         F.min(
             F.when(

@@ -11,9 +11,11 @@ Scale notes (100 TB, 1000 executors):
 * validation + metadata are per-row projections on the docs table — narrow,
   no shuffle, whole-stage codegen;
 * each parser branch reads its lines once and shuffles once, on hash(doc_id)
-  for the line table; every parser window (``lines.doc_window`` and the
-  segment counters) and the per-page record grouping are keyed by doc_id
-  first, so they all reuse that exchange;
+  for the line table; the line table has no window, so the bank filter
+  reaches the scan and a branch shuffles only its own bank's lines; every
+  parser window (``lines.doc_window`` and the segment counters) and the
+  per-page record grouping are keyed by doc_id first, so they all reuse
+  that exchange;
 * per-doc work ∝ span count ⇒ page-count skew; call
   :func:`aide_spark.operators.skew.repartition_by_span_count` before parsing
   when the corpus has heavy-tailed docs (SURVEY.md §4.1);
@@ -81,8 +83,8 @@ def parse_all(valid_docs: DataFrame) -> dict[str, DataFrame]:
         bank_lines = lines.where(F.col("bank_id") == bank).drop("bank_id")
         txns.append(parser.transactions(bank_lines).withColumn("bank_id", F.lit(bank)))
         # metadata inputs: the first-page line ARRAY (APGVB: two pages),
-        # built in place by lines.head_lines_frame (r6) — zero-shuffle,
-        # staged behind Generate barriers so nothing is re-evaluated per
+        # split from lines.pages_col by lines.head_lines_frame — zero-shuffle,
+        # staged behind one Generate barrier so it is not re-evaluated per
         # probe or per element. Docs whose head pages have no text lines
         # still get a metadata row (reference: metadata extracted from ''
         # text ⇒ constants only).
@@ -130,7 +132,7 @@ def media_spans(docs: DataFrame) -> DataFrame:
     arrays + array_compact, instead of a struct filter + two transforms +
     an array_sort. The sort was re-deriving what the spans contract already
     guarantees (offset IS the total order, and the array is stored in that
-    order — the same invariant head_lines_frame relies on)."""
+    order — the same invariant lines.pages_col relies on)."""
     refs = F.array_compact(
         F.zip_with(
             F.col("spans").getField("kind"),

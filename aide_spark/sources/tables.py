@@ -2,8 +2,8 @@
 
 The reference's I/O surface (S1-S12) collapses onto table reads/writes:
 
-* S1 document fetch      → :func:`read_documents` (spans table scan) or
-                           :func:`read_raw_binary` (binaryFile variant)
+* S1 document fetch      → :func:`read_documents` (spans table scan); raw
+                           PDFs: ``scripts/run_extraction.build_raw_docs``
 * S4 date-partitioned S3 keys (uploads/YYYY/MM/DD/…, upload/handler.py:383-391)
                          → :func:`write_date_partitioned`
 * S5 JSON results sink   → :func:`write_results` + :func:`results_json_view`
@@ -25,22 +25,6 @@ def read_documents(spark: SparkSession, path: str) -> DataFrame:
     """Scan the canonical interleaved-documents table. Explicit schema: never
     infer on a 10^12-row table (footer sampling alone costs a cluster-hour)."""
     return spark.read.schema(DOCUMENTS).parquet(path)
-
-
-def read_raw_binary(spark: SparkSession, path: str, pattern: str = "*.pdf") -> DataFrame:
-    """S1 raw-bytes variant: one row per file with content bytes. The
-    byte→span decode would be a mapInArrow UDF (SURVEY.md §2.12(a)); in the
-    spans-first architecture this path only feeds ingestion."""
-    return (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", pattern)
-        .load(path)
-        .select(
-            F.col("path").alias("doc_id"),
-            F.col("content"),
-            (F.length("content") / (1024.0 * 1024.0)).alias("declared_size_mb"),
-        )
-    )
 
 
 def write_date_partitioned(df: DataFrame, path: str, ts_col: str = "ingest_ts") -> None:

@@ -90,11 +90,12 @@ def main() -> None:
     aide_spark.warm(spark)
 
     from aide_spark.plans.checkpoint import SnapshotStore, run_with_resume
+    from aide_spark.sources.tables import read_documents
 
     if args.raw_pdf:
         docs = build_raw_docs(spark, args.input, args.passwords)
     else:
-        docs = spark.read.parquet(args.input)
+        docs = read_documents(spark, args.input)
 
     store = SnapshotStore(args.store)
     result = run_with_resume(spark, docs, store, batch_id=args.batch_id)

@@ -138,6 +138,32 @@ def test_staged_tables_have_declared_schemas(spark, store):
     assert lineage.schema.simpleString() == TABLES["lineage"].simpleString()
 
 
+def test_declared_documents_read_starts_no_job(spark, tmp_path):
+    """The job's span-table read, ``tables.read_documents``, takes the
+    declared DOCUMENTS schema: on a bank_id-partitioned span table it starts
+    no Spark job, where an inferring read starts one for the footers, and
+    it gives the same columns and types."""
+    from perfbench import inputs
+
+    from aide_spark.sources.tables import read_documents
+
+    path = inputs.span_table(str(tmp_path), 1, 36)
+    sc = spark.sparkContext
+
+    def jobs(group, read):
+        sc.setJobGroup(group, group)
+        try:
+            df = read()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return df, sc.statusTracker().getJobIdsForGroup(group)
+
+    declared, declared_jobs = jobs("declared-read", lambda: read_documents(spark, path))
+    inferred, inferred_jobs = jobs("inferred-read", lambda: spark.read.parquet(path))
+    assert declared_jobs == [] and inferred_jobs
+    assert declared.dtypes == inferred.dtypes
+
+
 def test_dlq_redrive_flags_critical_after_retries(spark, store):
     from aide_spark.plans.checkpoint import redrive_quarantined
 

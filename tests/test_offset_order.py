@@ -1,8 +1,9 @@
 """The spans offset-order invariant, per producer.
 
-``pipeline.media_spans`` and ``lines.head_lines_frame`` read a doc's spans
-array in stored order without sorting it: they rely on every producer
-storing spans in offset order. Each producer below promises dense offsets
+``pipeline.media_spans`` and ``lines.pages_col`` — the one page split that
+validation, ``lines.line_table`` and ``lines.head_lines_frame`` read — take
+a doc's spans array in stored order without sorting it: they rely on every
+producer storing spans in offset order. Each producer below promises dense offsets
 (offset == array index, which implies strictly increasing). The markdown
 renderer is the one consumer that re-sorts instead; its test pins that it
 still does, whatever order the span rows arrive in.

@@ -46,21 +46,70 @@ def test_j1_dispatch_broadcasts(spark):
     assert plan.count("BroadcastHashJoin") >= 2
 
 
-@pytest.mark.parametrize("bank", ["UNION", "CANARA", "APGVB"])
-def test_parser_branch_shuffle_budget(spark, bank):
-    """Each parser branch: the line table's doc_id-hash exchange must be
-    REUSED by every window/groupBy in the branch (hash(doc_id) satisfies
-    clustering on (doc_id, seg), (doc_id, page) and (doc_id, page, seg)),
-    and APGVB reads its lines once — no semi-join back to them."""
-    from aide_spark.operators import apgvb_parser, canara_parser, union_parser
+def _nodes(df) -> list:
+    """The physical plan's nodes, pre-order (the initial plan under AQE)."""
+    root = df._jdf.queryExecution().executedPlan()
+    if root.nodeName() == "AdaptiveSparkPlan":
+        root = root.executedPlan()
+    return _subtree(root)
+
+
+def _subtree(root) -> list:
+    """``root`` and every node below it, pre-order."""
+    out, stack = [], [root]
+    while stack:
+        node = stack.pop()
+        out.append(node)
+        kids = node.children()
+        stack.extend(kids.apply(i) for i in reversed(range(kids.size())))
+    return out
+
+
+def _names(nodes) -> list[str]:
+    return [n.nodeName() for n in nodes]
+
+
+def test_line_table_is_narrow(spark):
+    """The line table is two Generates over the page split: no shuffle and
+    no window of its own."""
     from aide_spark.operators.lines import line_table
 
-    parser = {"UNION": union_parser, "CANARA": canara_parser, "APGVB": apgvb_parser}[bank]
-    docs = local_corpus_df(spark, 24)
-    txns = parser.transactions(line_table(docs.where(f"bank_id = '{bank}'")))
+    names = _names(_nodes(line_table(local_corpus_df(spark, 24), carry=("bank_id",))))
+    assert "Exchange" not in names and "Window" not in names, names
+
+
+# Sorts per branch: every parser window and the APGVB per-page fold, all on
+# the line table's one doc_id exchange
+BRANCH_SORTS = {"UNION": 3, "CANARA": 4, "APGVB": 2}
+
+
+@pytest.mark.parametrize("bank", list(BRANCH_SORTS))
+def test_parser_branch_shuffle_budget(spark, bank):
+    """Each parser branch, built as ``pipeline.parse_all`` builds it (one
+    mixed-bank line table, then the bank filter): the line table's doc_id-
+    hash exchange must be REUSED by every window/groupBy in the branch
+    (hash(doc_id) satisfies clustering on (doc_id, seg), (doc_id, page) and
+    (doc_id, page, seg)), APGVB reads its lines once — no semi-join back to
+    them — and the bank filter runs below the exchange, so a branch
+    shuffles, sorts and windows only its own bank's lines."""
+    from pyspark.sql import functions as F
+
+    from aide_spark.operators.lines import line_table
+
+    lines = line_table(local_corpus_df(spark, 24), carry=("bank_id",))
+    bank_lines = lines.where(F.col("bank_id") == bank).drop("bank_id")
+    txns = pipeline.PARSERS[bank].transactions(bank_lines)
     n = explain_shuffles(txns)
     assert n == 1, f"{bank} parser branch shuffles: {n}"
     assert "LeftSemi" not in _plan(txns)
+    nodes = _nodes(txns)
+    names = _names(nodes)
+    assert names.count("Sort") == BRANCH_SORTS[bank], names
+    below = _subtree(nodes[names.index("Exchange")])[1:]
+    assert "Window" not in _names(below) and "Sort" not in _names(below), _names(below)
+    assert any(
+        n.nodeName() == "Filter" and "bank_id" in n.simpleString(100) for n in below
+    ), _names(below)
 
 
 def test_full_pipeline_shuffle_budget(spark):
